@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -189,37 +190,55 @@ class CDCSystem:
         self.registry.evolve(self.table_name, new_schema)
 
     def read_log(self) -> DataFrame:
+        """The change log with ``synced``/``sync_timestamp`` derived from
+        the committed sync watermarks (:func:`mark_synced`): the
+        reference's audit-table columns, without rewriting a row."""
         assert self.capture is not None, "setup_cdc first"
-        return self.capture.read_log()
+        return mark_synced(self.capture.read_log(), self.capture.ledger())
 
     def get_pending_changes(self, limit: int | None = None) -> DataFrame:
         """≅ cdc_system.py:199-231, decoded images included.
 
-        When the capture path's maintained ``(synced, cdc_id)`` zone
-        state exists (it does for any log captured by this package —
-        ``LogCapture`` merges it per batch, the replicators refresh it
-        per rewrite), the poll scan is PRUNED through
-        ``read_pending_pruned``: all-synced cdc_id zones convert to
-        pushed scan ranges, exactly what the reference's ``(synced,
-        cdc_id)`` covering index buys its hot poll (cdc_system.py:
-        209-216). Rows are identical to the plain filter (the
-        zone_pruned_between contract); a stateless log (external
-        writer) falls back to the unpruned scan.
+        Pending means ``cdc_id`` above the last committed sync
+        watermark. The derived ``synced`` filter simplifies to that
+        range, which the parquet scan pushes down, so files and row
+        groups of the drained prefix are skipped by their footer
+        statistics — what the reference's ``(synced, cdc_id)`` covering
+        index buys its hot poll (cdc_system.py:209-216). With the
+        ``orderBy + limit`` top-k, a poll is one scan job.
         """
         schema = self.registry.schema(self.table_name)
-        log = self.read_log()
-        zs = self.capture.read_zone_state() if self.capture else None
-        if zs is not None:
-            from cdc_system_spark.operators.maintenance import (
-                read_pending_pruned,
-            )
-
-            state, geo_lo, geo_hi, num_zones = zs
-            log = read_pending_pruned(log, state, geo_lo, geo_hi, num_zones)
-        return pending_changes(log, limit=limit, row_schema=schema)
+        return pending_changes(self.read_log(), limit=limit, row_schema=schema)
 
     def get_change_statistics(self) -> dict[str, dict[str, int]]:
         return _monitor.get_change_statistics(self.read_log())
+
+
+def _replicate_round(
+    source: CDCSystem, batch: DataFrame, write: Callable[[DataFrame], None]
+) -> int:
+    """One replication round, shared by the replicators: ``write`` the
+    sink from the pending ``batch`` (oldest first), then commit the
+    batch's largest ``cdc_id`` as the sync watermark. Returns the number
+    of changes applied.
+
+    Unlike the reference — which marks source rows synced *before* the
+    target commit (cdc_system.py:313-315) — the watermark commits only
+    after the sink version has landed, so a crash in between re-delivers
+    the batch into an idempotent merge instead of losing changes. No
+    file of the log is touched.
+    """
+    cap = source.capture
+    assert cap is not None, "setup_cdc first"
+    batch = batch.cache()
+    try:
+        n, wm = batch.agg(F.count("*"), F.max("cdc_id")).first()
+        if n:
+            write(batch)
+            cap.commit_watermark(wm)
+        return n
+    finally:
+        batch.unpersist()
 
 
 class CDCReplicator:
@@ -234,8 +253,8 @@ class CDCReplicator:
         """Honor the retry config the reference declares but never uses
         (config.py:35-36: CDC_MAX_RETRIES / CDC_RETRY_DELAY). Retries
         are safe here because the whole replicate step is idempotent:
-        the target write is write-new-then-flip and the log is only
-        flagged after the target version lands.
+        the target write is write-new-then-flip, and the sync watermark
+        commits only after the target version lands.
         """
         import time
 
@@ -252,40 +271,21 @@ class CDCReplicator:
         raise last
 
     def replicate_changes(self, batch_size: int | None = None) -> int:
-        """One micro-batch: pending → net-effect merge → mark synced.
+        """One micro-batch: pending → net-effect merge → replica version
+        → sync watermark (see :func:`_replicate_round`).
 
         Returns the number of changes applied (≅ cdc_system.py:279-318).
-        Unlike the reference — which marks source rows synced *before*
-        the target commit (cdc_system.py:313-315) — the target snapshot
-        is written first, then the log flagged, so a crash re-delivers
-        into an idempotent merge instead of losing changes.
         """
         batch_size = batch_size or self.source.config.batch_size
-        batch = self.source.get_pending_changes(limit=batch_size)
-        batch = batch.cache()
-        n = batch.count()
-        if n == 0:
-            return 0
-        current = self.target.read()
-        merged = apply_changes(current, batch, key=self.key, change_key="record_id")
-        self._with_retries(lambda: self.target.write(merged))
 
-        ids = batch.select("cdc_id")
-        log = self.source.read_log()
-        updated = mark_synced(log, ids)
-        # rewrite log snapshot-style (parquet has no in-place update)
-        cap = self.source.capture
-        assert cap is not None
-        tmp = cap.path + ".next"
-        updated.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(cap.path, ignore_errors=True)
-        os.replace(tmp, cap.path)
-        # re-pin the (synced, cdc_id) zone state over the rewritten log
-        # so the next poll prunes the freshly-drained zones (a crash
-        # before this line is safe: the old state only under-prunes)
-        cap.refresh_zone_state()
-        batch.unpersist()
-        return n
+        def write(batch: DataFrame) -> None:
+            current = self.target.read()
+            merged = apply_changes(current, batch, key=self.key, change_key="record_id")
+            self._with_retries(lambda: self.target.write(merged))
+
+        return _replicate_round(
+            self.source, self.source.get_pending_changes(limit=batch_size), write
+        )
 
 
 #: output schema of operators/scd.scd2_from_log / scd2_apply
@@ -306,9 +306,9 @@ class SCD2Replicator:
     history instead of a current-state replica — the other canonical
     CDC sink (audit trails, point-in-time joins, feature backfills).
     Same durability order as :class:`CDCReplicator`: history version
-    lands first, the log is flagged after, so a crash re-delivers into
-    :func:`~cdc_system_spark.operators.scd.scd2_apply`, whose
-    stale-batch guard makes out-of-order redelivery loud, not corrupt.
+    lands first, the sync watermark commits after, so a crash
+    re-delivers into :func:`~cdc_system_spark.operators.scd.scd2_apply`,
+    whose stale-batch guard makes out-of-order redelivery loud, not corrupt.
 
     Requires ``changed_at`` to be monotone with ``cdc_id`` per key
     (true for capture-time stamps); violations raise at apply time.
@@ -322,26 +322,13 @@ class SCD2Replicator:
         from cdc_system_spark.operators.scd import scd2_apply
 
         batch_size = batch_size or self.source.config.batch_size
-        log = self.source.read_log()
-        batch = (
-            log.filter(~F.col("synced")).orderBy("cdc_id").limit(batch_size)
-        ).cache()
-        n = batch.count()
-        if n == 0:
-            return 0
-        merged = scd2_apply(self.history.read(), batch)
-        self.history.write(merged)
 
-        updated = mark_synced(log, batch.select("cdc_id"))
-        cap = self.source.capture
-        assert cap is not None
-        tmp = cap.path + ".next"
-        updated.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(cap.path, ignore_errors=True)
-        os.replace(tmp, cap.path)
-        cap.refresh_zone_state()
-        batch.unpersist()
-        return n
+        def write(batch: DataFrame) -> None:
+            self.history.write(scd2_apply(self.history.read(), batch))
+
+        return _replicate_round(
+            self.source, pending_changes(self.source.read_log(), limit=batch_size), write
+        )
 
 
 class CDCMonitor:

@@ -19,11 +19,17 @@ from __future__ import annotations
 
 import os
 import time
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_system_spark.model import AUDIT_SCHEMA, ChangeOp
+
+
+#: ``cdc_id = base + key``: keys must lie in ``[0, KEY_SPAN)`` so that
+#: ids of one capture call never reach the next call's base
+KEY_SPAN = 1_000_000_000
 
 
 def as_changes(
@@ -38,7 +44,8 @@ def as_changes(
     ``cdc_id`` = base + key (keys are unique within one capture call);
     for strict arrival ordering across calls, callers pass a
     monotonically increasing ``base_cdc_id`` (epoch-scaled, see
-    LogCapture).
+    LogCapture). A key outside ``[0, KEY_SPAN)`` (or NULL) fails the
+    job that evaluates the rows, so a capture of it writes nothing.
     """
     op = ChangeOp(operation).value
     img = F.to_json(F.struct(*[F.col(c) for c in rows.columns]))
@@ -52,10 +59,19 @@ def as_changes(
         old_img = F.col("_old_img")
     if op == ChangeOp.DELETE.value:
         old_img, img = img, F.lit(None).cast("string")
+    k = F.col(key).cast("long")
+    checked = F.when(k.between(0, KEY_SPAN - 1), k).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"cdc key %s of column {key!r} is outside [0, {KEY_SPAN})",
+                k.cast("string"),
+            )
+        )
+    )
     return rows.select(
-        (F.lit(base_cdc_id) + F.col(key).cast("long")).alias("cdc_id"),
+        (F.lit(base_cdc_id) + checked).alias("cdc_id"),
         F.lit(op).alias("operation"),
-        F.col(key).cast("long").alias("record_id"),
+        k.alias("record_id"),
         old_img.alias("old_data"),
         img.alias("new_data"),
         F.current_timestamp().alias("changed_at"),
@@ -65,7 +81,8 @@ def as_changes(
 
 
 class LogCapture:
-    """Append-only parquet change log for one tracked table.
+    """Append-only parquet change log for one tracked table, plus the
+    ledger of its committed sync watermarks.
 
     ≅ ``setup_trigger_based_cdc`` + the three triggers
     (cdc_system.py:105-197): the log lives at ``{root}/{table}_cdc`` —
@@ -73,21 +90,28 @@ class LogCapture:
     At 100 TB the log would be partitioned by date(changed_at); appends
     are per-batch files, read via streaming file source (streaming/).
 
-    The capture path also MAINTAINS the ``(synced, cdc_id)`` zone state
-    (``operators/maintenance.py log_zone_state`` — the reference's
-    covering index, cdc_system.py:129-132) at ``{log}_zones``: each
-    capture merges its batch's zones in BEFORE appending (a crash
-    between the two leaves the state a conservative superset — extra
-    claimed-pending zones cost scan bytes, never correctness), and the
-    replicators call :meth:`refresh_zone_state` after their mark-synced
-    full-log rewrite (an unrefreshed state is equally safe: mark_synced
-    only flips 0→1, so stale ``v_min`` values only under-prune). The
-    production poll (``api.py CDCSystem.get_pending_changes``) routes
-    through ``read_pending_pruned`` whenever the state exists — the
-    all-synced prefix of the log converts to pushed cdc_id scan ranges.
+    Each capture call is one plain parquet append; no file of the log
+    is ever rewritten, renamed or deleted. Sync progress is not kept in
+    the rows: the replicators drain in ``cdc_id`` order, so the synced
+    changes are always a prefix of the log, and each replication round
+    commits that prefix as one watermark — a ``(wm, sync_time)`` entry
+    of the ledger at ``{log}_ledger`` (:meth:`commit_watermark`), written
+    after the replica version lands. The ``synced``/``sync_timestamp``
+    columns on disk keep their as-captured values (False / NULL);
+    ``CDCSystem.read_log`` derives them from the ledger
+    (``changelog.mark_synced``), and the pending poll becomes the
+    ``cdc_id > wm`` range that the parquet scan pushes down.
+
+    The watermark is only sound while new changes get ids above it, so
+    ids are allocated as ``epoch * KEY_SPAN + key``: keys are range
+    checked in :func:`as_changes`, and the epoch grows with every call
+    and starts above the largest id already in the log (read once per
+    instance from the parquet footers), so a restart within the same
+    second never allocates an id at or below a committed watermark.
+    One writer per log at a time.
     """
 
-    #: zone count of the maintained (synced, cdc_id) state
+    #: zone count of the on-demand (synced, cdc_id) zone state
     NUM_ZONES = 64
 
     def __init__(self, spark: SparkSession, root: str, table: str, key: str = "id"):
@@ -95,21 +119,42 @@ class LogCapture:
         self.table = table
         self.key = key
         self.path = os.path.join(root, f"{table}_cdc")
-        self.zones_path = self.path + "_zones"
-        self._zone_cache: tuple | None = None
-        #: stat stamp (inode, mtime_ns, size) of the zones file the
-        #: cache mirrors — a SECOND LogCapture over the same path (two
-        #: CDCSystem handles in one process) invalidates a reader's
-        #: cache when the writer's os.replace lands a new file, so a
-        #: stale cache can never prune rows another instance appended
-        self._zone_mtime: tuple[int, int, int] | None = None
-        self._epoch = 0
+        self.ledger_path = self.path + "_ledger"
+        #: epoch of the last allocated base; None until bootstrapped
+        #: from the log on the first capture
+        self._epoch: int | None = None
 
     def _next_base(self) -> int:
-        # strictly increasing per capture call; key-space below 1e9
-        # (epoch_seconds * 1e9 stays well inside int64)
+        # strictly increasing per capture call, and above every id in
+        # the log (epoch_seconds * 1e9 stays well inside int64)
+        if self._epoch is None:
+            self._epoch = self._max_cdc_id() // KEY_SPAN
         self._epoch = max(self._epoch + 1, int(time.time()))
-        return self._epoch * 1_000_000_000
+        return self._epoch * KEY_SPAN
+
+    def _max_cdc_id(self) -> int:
+        """Largest ``cdc_id`` in the log (-1 if it has none), from the
+        parquet footer statistics — driver-side, no Spark job."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        hi = -1
+        if not os.path.isdir(self.path):
+            return hi
+        for name in os.listdir(self.path):
+            if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+                continue
+            file = os.path.join(self.path, name)
+            meta = pq.read_metadata(file)
+            col = meta.schema.names.index("cdc_id")
+            for i in range(meta.num_row_groups):
+                st = meta.row_group(i).column(col).statistics
+                if st is None or not st.has_min_max:  # writer kept no stats
+                    ids = pq.read_table(file, columns=["cdc_id"]).column(0)
+                    hi = max(hi, pc.max(ids).as_py())
+                    break
+                hi = max(hi, st.max)
+        return hi
 
     def capture_insert(self, rows: DataFrame) -> None:
         self._append(as_changes(rows, "INSERT", self.key, base_cdc_id=self._next_base()))
@@ -123,193 +168,72 @@ class LogCapture:
         self._append(as_changes(rows, "DELETE", self.key, base_cdc_id=self._next_base()))
 
     def _append(self, changes: DataFrame) -> None:
-        # ONE materialization feeds both the zone-state merge and the
-        # data write: recomputing a non-deterministic source between
-        # the two (a sample, a limit, a changing view) could persist a
-        # state that under-covers the rows actually appended, breaking
-        # read_pending_pruned's superset contract — so pin the batch
-        # first (the replicators already persist their batches).
-        changes = changes.localCheckpoint(eager=True)
-        # state first, then data: the state must summarize a SUPERSET
-        # of the log for pruning to stay exact (maintenance.py
-        # read_pending_pruned's freshness contract)
-        self._merge_zone_state(changes)
         changes.write.mode("append").parquet(self.path)
 
     def read_log(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+        """The log as captured: the on-disk ``synced``/``sync_timestamp``
+        are not sync state (``CDCSystem.read_log`` derives those from
+        the ledger). A log that does not exist yet reads as empty; an
+        unreadable one raises when the frame is evaluated — it never
+        reads as an empty, fully-synced log."""
+        if not os.path.exists(self.path):
             return self.spark.createDataFrame([], AUDIT_SCHEMA)
+        return self.spark.read.schema(AUDIT_SCHEMA).parquet(self.path)
 
-    # -- maintained (synced, cdc_id) zone state ------------------------------
-    #
-    # The state is ≤ NUM_ZONES rows, so everything except the batch
-    # aggregation itself is DRIVER-side work: the merge runs in Python
-    # over the cached rows and the artifact is written with pyarrow as
-    # a single parquet file (Spark reads a single-file path
-    # transparently) — per-capture maintenance costs ONE Spark job
-    # (the batch zone aggregation), not a read-merge-collect-write
-    # chain of four. The in-memory cache mirrors the file keyed by its
-    # mtime: a fresh process bootstraps from disk on first use, and a
-    # SECOND instance over the same path re-reads whenever another
-    # writer's os.replace moved the file — stale-cache pruning cannot
-    # skip rows a concurrent instance appended. (Concurrent WRITERS
-    # remain single-writer-per-table, same as the log itself.)
+    # -- committed sync watermarks -------------------------------------------
 
-    def _zones_stamp(self) -> tuple[int, int, int] | None:
-        """(inode, mtime_ns, size) of the zones file — the cache key.
-        mtime alone is NOT enough: Linux file timestamps can be
-        jiffy-coarse, so two os.replace writes inside one tick would
-        leave a stale cache looking fresh; every replace lands a NEW
-        inode, so the triple changes on every write in practice."""
+    def ledger(self) -> list[tuple[int, datetime]]:
+        """The committed ``(wm, sync_time)`` entries, oldest first;
+        ``wm`` strictly increases. Read on the driver, no Spark job."""
         try:
-            st = os.stat(self.zones_path)
-        except OSError:
-            return None
-        return (st.st_ino, st.st_mtime_ns, st.st_size)
+            with open(self.ledger_path) as f:
+                lines = f.read().splitlines()
+        except FileNotFoundError:
+            return []
+        out = []
+        for line in lines:
+            wm, ts = line.split("\t")
+            out.append((int(wm), datetime.fromisoformat(ts)))
+        return out
 
-    def _current_zone_state(self) -> tuple[dict, int, int, int] | None:
-        """The cached state, re-read from disk whenever the zones
-        file's stat stamp moved past the cached copy — the
-        cross-instance staleness guard."""
-        mt = self._zones_stamp()
-        if self._zone_cache is not None and mt == self._zone_mtime:
-            return self._zone_cache
-        state = self._zone_rows_from_disk()
-        self._zone_cache = state
-        self._zone_mtime = mt
-        return state
+    def commit_watermark(self, wm: int) -> None:
+        """Mark every change with ``cdc_id <= wm`` synced, as of now.
 
-    def _zone_rows_from_disk(self) -> tuple[dict, int, int, int] | None:
-        import pyarrow.parquet as pq
-
-        try:
-            t = pq.read_table(self.zones_path).to_pylist()
-        except Exception:
-            return None
-        if not t:
-            return None
-        zones = {
-            int(r["zone"]): (int(r["n_rows"]), float(r["v_min"]),
-                             float(r["v_max"]))
-            for r in t
-        }
-        r0 = t[0]
-        return zones, int(r0["geo_lo"]), int(r0["geo_hi"]), int(r0["num_zones"])
-
-    def _write_zone_state(
-        self, zones: dict, geo_lo: int, geo_hi: int
-    ) -> None:
-        import shutil
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        ordered = sorted(zones.items())
-        table = pa.table(
-            {
-                "zone": pa.array([z for z, _ in ordered], pa.int32()),
-                "n_rows": pa.array([v[0] for _, v in ordered], pa.int64()),
-                "v_min": pa.array([v[1] for _, v in ordered], pa.float64()),
-                "v_max": pa.array([v[2] for _, v in ordered], pa.float64()),
-                "geo_lo": pa.array([geo_lo] * len(ordered), pa.int64()),
-                "geo_hi": pa.array([geo_hi] * len(ordered), pa.int64()),
-                "num_zones": pa.array(
-                    [self.NUM_ZONES] * len(ordered), pa.int32()
-                ),
-            }
-        )
-        if os.path.isdir(self.zones_path):  # legacy directory-form state
-            shutil.rmtree(self.zones_path, ignore_errors=True)
-        # the state lands BEFORE the first log append, so the table
-        # root may not exist yet
-        os.makedirs(os.path.dirname(self.zones_path), exist_ok=True)
-        tmp = self.zones_path + ".tmp"
-        pq.write_table(table, tmp)
-        os.replace(tmp, self.zones_path)
-        self._zone_cache = (zones, geo_lo, geo_hi, self.NUM_ZONES)
-        self._zone_mtime = self._zones_stamp()
-
-    def read_zone_state(self):
-        """``(state_df, geo_lo, geo_hi, num_zones)`` of the maintained
-        zone state, or ``None`` for a log captured before this state
-        existed (the poll then falls back to the plain scan). The
-        ≤ NUM_ZONES-row frame materializes from the driver-side cache/
-        file — reading it costs no scan job."""
-        cached = self._current_zone_state()
-        if cached is None:
-            return None
-        zones, geo_lo, geo_hi, nz = cached
-        df = self.spark.createDataFrame(
-            [(z, v[0], v[1], v[2]) for z, v in sorted(zones.items())],
-            "zone int, n_rows long, v_min double, v_max double",
-        )
-        return df, geo_lo, geo_hi, nz
-
-    def _merge_zone_state(self, batch: DataFrame) -> None:
-        from cdc_system_spark.operators.maintenance import log_zone_state
-
-        cur = self._current_zone_state()
-        if cur is None:
-            b = batch.agg(
-                F.min("cdc_id").alias("lo"), F.max("cdc_id").alias("hi")
-            ).collect()[0]
-            if b["lo"] is None:
-                return
-            # geometry pins at the first batch; later cdc_ids beyond
-            # geo_hi clamp into the top zone, whose scan span is
-            # unbounded above (zone_pruned_between's edge rule) — the
-            # tail just prunes less until a refresh re-pins
-            geo_lo = int(b["lo"])
-            geo_hi = max(int(b["hi"]), geo_lo + self.NUM_ZONES - 1)
-            zones: dict = {}
-        else:
-            zones, geo_lo, geo_hi, _ = cur
-            zones = dict(zones)
-        brows = log_zone_state(
-            batch, geo_lo, geo_hi, self.NUM_ZONES
-        ).collect()
-        for r in brows:
-            z = int(r["zone"])
-            n, lo, hi = int(r["n_rows"]), float(r["v_min"]), float(r["v_max"])
-            if z in zones:
-                on, olo, ohi = zones[z]
-                zones[z] = (on + n, min(olo, lo), max(ohi, hi))
-            else:
-                zones[z] = (n, lo, hi)
-        self._write_zone_state(zones, geo_lo, geo_hi)
-
-    def refresh_zone_state(self) -> None:
-        """Rebuild the zone state from the full log with FRESH geometry
-        — for callers that just rewrote the log wholesale (the
-        replicators' mark-synced rewrite): the rewrite scanned
-        everything anyway, and re-pinning the geometry restores full
-        pruning resolution over the drained prefix."""
-        from cdc_system_spark.operators.maintenance import log_zone_state
-
-        log = self.read_log()
-        b = log.agg(
-            F.min("cdc_id").alias("lo"), F.max("cdc_id").alias("hi")
-        ).collect()[0]
-        if b["lo"] is None:
-            import shutil
-
-            self._zone_cache = None
-            self._zone_mtime = None
-            shutil.rmtree(self.zones_path, ignore_errors=True)
-            if os.path.exists(self.zones_path):
-                os.remove(self.zones_path)
+        The ledger is rewritten to a temporary file, flushed to disk and
+        swapped in with ``os.replace``, so a reader sees the old ledger
+        or the new one, never a torn one. A watermark at or below the
+        committed one changes nothing: the watermark never moves back."""
+        entries = self.ledger()
+        if entries and wm <= entries[-1][0]:
             return
+        entries.append((int(wm), datetime.now(timezone.utc)))
+        os.makedirs(os.path.dirname(self.ledger_path), exist_ok=True)
+        tmp = self.ledger_path + ".tmp"
+        with open(tmp, "w") as f:
+            f.writelines(f"{w}\t{t.isoformat()}\n" for w, t in entries)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self.ledger_path)
+
+    def refresh_zone_state(self) -> tuple[DataFrame, int, int, int] | None:
+        """Build the ``(synced, cdc_id)`` zone state of the whole log on
+        demand: ``(state_df, geo_lo, geo_hi, num_zones)`` for
+        ``maintenance.read_pending_pruned``, or ``None`` for an empty
+        log. Nothing is stored and the sync path never calls it — the
+        poll prunes on the watermark — so it is for analytics that want
+        per-zone sync counts; it costs a bounds scan of the log, and
+        the state is lazy."""
+        from cdc_system_spark.operators.changelog import mark_synced
+        from cdc_system_spark.operators.maintenance import log_zone_state
+
+        log = mark_synced(self.read_log(), self.ledger())
+        b = log.agg(F.min("cdc_id").alias("lo"), F.max("cdc_id").alias("hi")).first()
+        if b["lo"] is None:
+            return None
         geo_lo = int(b["lo"])
         geo_hi = max(int(b["hi"]), geo_lo + self.NUM_ZONES - 1)
-        rows = log_zone_state(log, geo_lo, geo_hi, self.NUM_ZONES).collect()
-        zones = {
-            int(r["zone"]): (int(r["n_rows"]), float(r["v_min"]),
-                             float(r["v_max"]))
-            for r in rows
-        }
-        self._write_zone_state(zones, geo_lo, geo_hi)
+        state = log_zone_state(log, geo_lo, geo_hi, self.NUM_ZONES)
+        return state, geo_lo, geo_hi, self.NUM_ZONES
 
 
 def timestamp_capture(

@@ -6,7 +6,8 @@ Reference behaviors re-expressed (SURVEY.md §2.2/§2.4/§2.5):
   ``SELECT * FROM {cdc} WHERE synced=0 ORDER BY cdc_id [LIMIT n]`` plus
   JSON decode of old/new row images.
 * ``mark_synced``      ≅ ``mark_as_synced`` (cdc_system.py:233-246):
-  semi-join of the log against a replicated-id set.
+  derives the ``synced``/``sync_timestamp`` columns from the ledger of
+  committed sync watermarks instead of updating rows.
 * ``change_statistics`` ≅ ``get_change_statistics`` (cdc_system.py:248-268):
   GROUP BY operation with pivoted pending/synced conditional sums.
 * ``change_statistics_rollup`` ≅ the Python-side totals rollup
@@ -15,12 +16,17 @@ Reference behaviors re-expressed (SURVEY.md §2.2/§2.4/§2.5):
 
 Scale notes: the filter+orderBy+limit plan compiles to
 TakeOrderedAndProject — a true distributed top-k (per-partition heap,
-then k-way driver merge), not a global sort. At 100 TB the `synced` flag
-would live as a partition column (or be retired for streaming offsets,
-see streaming/), making the filter a partition-pruned scan.
+then k-way driver merge), not a global sort. The `synced` flag is not
+stored: it is ``cdc_id <= wm`` for the committed watermark, so the
+pending filter is a ``cdc_id`` range the parquet scan pushes down, and
+files and row groups of the synced prefix are skipped by their footer
+statistics — a log that is only ever appended to, as in streaming/.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
+from datetime import datetime
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -53,35 +59,43 @@ def pending_changes(
     return df
 
 
-def mark_synced(log: DataFrame, synced_ids: DataFrame | list[int]) -> DataFrame:
-    """Return the log with ``synced``/``sync_timestamp`` set for the ids.
+def mark_synced(log: DataFrame, ledger: Sequence[tuple[int, datetime]]) -> DataFrame:
+    """Return the log with ``synced``/``sync_timestamp`` derived from the
+    committed sync watermarks ``ledger`` (``(wm, sync_time)``, oldest
+    first, ``wm`` increasing — ``LogCapture.ledger``).
 
     Reference: ``UPDATE {cdc} SET synced=1, sync_timestamp=now WHERE
-    cdc_id IN (...)`` (cdc_system.py:238-243). Small id sets use a
-    literal ``isin`` (pushed to the scan); DataFrame id sets use a
-    broadcast left-semi-join-shaped flag so the plan never shuffles the
-    (large) log side.
+    cdc_id IN (...)`` (cdc_system.py:238-243). The replicators drain in
+    ``cdc_id`` order, so each such update covers exactly the ids up to
+    the batch's largest one, and no row needs rewriting: ``synced`` is
+    ``cdc_id <= wm`` of the last entry, and ``sync_timestamp`` is the
+    time of the first entry whose ``wm`` covers the row. Both are
+    column expressions over driver-side literals (a balanced CASE tree,
+    log2(entries) comparisons per row), so the derivation adds no Spark
+    job, and a filter on ``synced`` simplifies to a pushed-down
+    ``cdc_id`` range.
     """
-    if isinstance(synced_ids, DataFrame):
-        flagged = (
-            synced_ids.select(F.col(synced_ids.columns[0]).alias("cdc_id"))
-            .distinct()
-            .withColumn("_hit", F.lit(True))
+    cdc_id = F.col("cdc_id")
+    if not ledger:
+        return log.withColumns(
+            {"synced": F.lit(False), "sync_timestamp": F.lit(None).cast("timestamp")}
         )
-        out = log.join(F.broadcast(flagged), on="cdc_id", how="left")
-        hit: Column = F.coalesce(F.col("_hit"), F.lit(False))
-    else:
-        hit = F.col("cdc_id").isin([int(i) for i in synced_ids])
-        out = log
-    return (
-        out.withColumn("synced", F.col("synced") | hit)
-        .withColumn(
-            "sync_timestamp",
-            F.when(hit & F.col("sync_timestamp").isNull(), F.current_timestamp()).otherwise(
-                F.col("sync_timestamp")
-            ),
+
+    def first_covering(lo: int, hi: int) -> Column:
+        # sync time of the first of ledger[lo:hi] whose wm covers the row
+        if hi - lo == 1:
+            wm, ts = ledger[lo]
+            return F.when(cdc_id <= wm, F.lit(ts))
+        mid = (lo + hi) // 2
+        return F.when(cdc_id <= ledger[mid - 1][0], first_covering(lo, mid)).otherwise(
+            first_covering(mid, hi)
         )
-        .drop("_hit")
+
+    return log.withColumns(
+        {
+            "synced": cdc_id <= ledger[-1][0],
+            "sync_timestamp": first_covering(0, len(ledger)),
+        }
     )
 
 

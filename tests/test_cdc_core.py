@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -351,35 +353,39 @@ def test_replication_lag_metrics(spark, system, tmp_path):
     assert lag2["last_sync_lag_s"] is not None
 
 
-def test_production_poll_is_pruned_by_maintained_zone_state(spark, system, tmp_path):
-    # r10: the replicator's micro-batch poll runs through the maintained
-    # (synced, cdc_id) zone state (capture merges it per batch, the
-    # replicate rewrite refreshes it) — after a full drain the poll
-    # skips every all-synced zone, a fresh capture re-arms only the
-    # tail, and rows stay identical to the plain unpruned poll
+def _log_files(cap):
+    """(name, size, mtime_ns) of every data file of the log."""
+    out = set()
+    for n in os.listdir(cap.path):
+        if n.endswith(".parquet"):
+            st = os.stat(os.path.join(cap.path, n))
+            out.add((n, st.st_size, st.st_mtime_ns))
+    return out
+
+
+def test_production_poll_is_pruned_by_committed_watermark(spark, system, tmp_path):
+    # the replicator's micro-batch poll is `cdc_id > wm` for the
+    # committed sync watermark: after a full drain the poll is empty, a
+    # fresh capture shows only the tail, rows stay identical to the
+    # plain unpruned poll, and the range reaches the parquet scan
+    from cdc_system_spark.operators.maintenance import read_pending_pruned
+
     cap = system.capture
     cap.capture_insert(_rows(spark, [(i, f"u{i}", i) for i in range(1, 9)]))
-    # the state exists from the FIRST capture and covers the log
-    zs = cap.read_zone_state()
-    assert zs is not None
-    state, geo_lo, geo_hi, nz = zs
-    assert nz == cap.NUM_ZONES and geo_lo <= geo_hi
-    assert state.agg(F.sum("n_rows")).collect()[0][0] == 8
-
+    assert cap.ledger() == []
     target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
     rep = CDCReplicator(system, target)
+    files = _log_files(cap)
     assert rep.replicate_changes(batch_size=100) == 8
-    # fully drained: every zone is all-synced (v_min = 1), so the
-    # pruned poll returns empty WITHOUT scanning any log values
-    state, *_ = cap.read_zone_state()
-    assert state.filter(F.col("v_min") < 1).count() == 0
+    # replication touched no file of the log: it committed one entry,
+    # the drained prefix's largest cdc_id, to the ledger
+    assert _log_files(cap) == files
+    (wm, t1), = cap.ledger()
+    assert wm == system.read_log().agg(F.max("cdc_id")).first()[0]
     assert system.get_pending_changes().count() == 0
 
-    # a fresh capture re-arms only the tail zone(s)
+    # a fresh capture shows only the tail
     cap.capture_insert(_rows(spark, [(21, "u21", 21), (22, "u22", 22)]))
-    state, *_ = cap.read_zone_state()
-    armed = state.filter(F.col("v_min") < 1)
-    assert 1 <= armed.count() <= 2
     pruned = system.get_pending_changes()
     plain = pending_changes(
         system.read_log(), row_schema=system.registry.schema("test_table")
@@ -387,17 +393,36 @@ def test_production_poll_is_pruned_by_maintained_zone_state(spark, system, tmp_p
     key = lambda d: [(r["cdc_id"], r["record_id"]) for r in d.collect()]
     assert key(pruned) == key(plain)
     assert [r[1] for r in key(pruned)] == [21, 22]
-    # the surviving tail-zone cdc_id range reaches the parquet scan as
-    # a pushed filter — the covering-index skip, now on the PRODUCTION
-    # poll path (r9 left it only on the registered query)
+    assert all(c > wm for c, _ in key(pruned))
+    # the watermark reaches the parquet scan as a pushed cdc_id filter,
+    # so files and row groups of the synced prefix are skipped
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "cdc_id" in plan.split("PushedFilters")[1][:200]
-    # drain again: end-to-end rows flowed through the pruned poll
+    # the on-demand zone state over the derived flag prunes to the same rows
+    state, geo_lo, geo_hi, nz = cap.refresh_zone_state()
+    assert state.agg(F.sum("n_rows")).first()[0] == 10
+    zoned = read_pending_pruned(system.read_log(), state, geo_lo, geo_hi, nz)
+    assert key(zoned) == key(plain)
+
+    # drain again: rows flowed through the pruned poll, and each change
+    # carries the time of the first commit that covered it
     assert rep.replicate_changes(batch_size=100) == 2
     assert {r["id"] for r in target.read().collect()} == set(
         list(range(1, 9)) + [21, 22]
     )
+    (_, t1b), (wm2, t2) = cap.ledger()
+    assert t1b == t1 and wm2 > wm and t2 >= t1
+    got = {
+        r["record_id"]: (r["synced"], r["sync_timestamp"])
+        for r in system.read_log().collect()
+    }
+    strip = lambda t: t.astimezone().replace(tzinfo=None)  # as collect() returns
+    assert got == {
+        **{i: (True, strip(t1)) for i in range(1, 9)},
+        21: (True, strip(t2)),
+        22: (True, strip(t2)),
+    }
 
 
 def test_pruned_poll_invariant_under_random_op_sequences(spark, system, tmp_path):
@@ -472,3 +497,175 @@ def test_second_instance_sees_fresh_zone_state(spark, tmp_path):
     key = lambda d: [(r["cdc_id"], r["record_id"]) for r in d.collect()]
     assert key(pruned) == key(plain)
     assert [r[1] for r in key(pruned)] == [1, 2, 3]
+
+
+def test_restart_in_same_second_allocates_above_the_watermark(
+    spark, tmp_path, monkeypatch
+):
+    # a restarted capture (a fresh LogCapture over the same log) within
+    # the same second must allocate ids above every id in the log — at
+    # or below the committed watermark its changes would read as synced
+    from types import SimpleNamespace
+
+    from cdc_system_spark.operators import capture as capture_mod
+
+    monkeypatch.setattr(
+        capture_mod, "time", SimpleNamespace(time=lambda: 1_700_000_000.0)
+    )
+    first = CDCSystem(spark, str(tmp_path), "test_table")
+    first.setup_cdc(TEST_SCHEMA, key="id")
+    first.capture.capture_insert(_rows(spark, [(5, "a", 1), (7, "b", 2)]))
+    first.capture.capture_insert(_rows(spark, [(6, "c", 3)]))
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    assert CDCReplicator(first, target).replicate_changes() == 3
+    before = max(r["cdc_id"] for r in first.read_log().collect())
+
+    restarted = CDCSystem(spark, str(tmp_path), "test_table")
+    restarted.setup_cdc(TEST_SCHEMA, key="id")
+    restarted.capture.capture_update(
+        _rows(spark, [(5, "a2", 10)]), _rows(spark, [(5, "a", 1)])
+    )
+    restarted.capture.capture_insert(_rows(spark, [(1, "d", 4)]))
+    pending = restarted.get_pending_changes().collect()
+    assert [(r["operation"], r["record_id"]) for r in pending] == [
+        ("UPDATE", 5),
+        ("INSERT", 1),
+    ]
+    assert min(r["cdc_id"] for r in pending) > before
+    ids = [r["cdc_id"] for r in restarted.read_log().collect()]
+    assert len(ids) == len(set(ids)) == 5
+    assert CDCReplicator(restarted, target).replicate_changes() == 2
+    assert {r["id"]: r["value"] for r in target.read().collect()} == {
+        1: 4, 5: 10, 6: 3, 7: 2,
+    }
+
+
+@pytest.mark.parametrize("bad_key", [-1, 1_000_000_000])
+def test_capture_rejects_keys_outside_the_id_range(spark, system, bad_key):
+    # cdc_id = epoch * 1e9 + key: a key outside [0, 1e9) would collide
+    # with, or sort before, another call's ids — the write fails and
+    # commits no file
+    cap = system.capture
+    cap.capture_insert(_rows(spark, [(1, "a", 1)]))
+    files = _log_files(cap)
+    with pytest.raises(Exception, match="outside"):
+        cap.capture_insert(_rows(spark, [(2, "b", 2), (bad_key, "x", 0)]))
+    assert _log_files(cap) == files
+    assert [r["record_id"] for r in system.get_pending_changes().collect()] == [1]
+
+
+def test_health_report_raises_on_a_corrupt_log(spark, system):
+    # an unreadable log must fail loudly, never read as "0 pending"
+    cap = system.capture
+    cap.capture_insert(_rows(spark, [(i, f"u{i}", i) for i in range(1, 9)]))
+    for name, size, _ in _log_files(cap):
+        os.truncate(os.path.join(cap.path, name), size // 2)
+    with pytest.raises(Exception):
+        CDCMonitor(system).get_health_report()
+
+
+def _capture(spark, cap, op, rows, live):
+    """One capture call; ``live`` (key -> image) is the tracked table,
+    which gives UPDATE its old images."""
+    from perfbench.gen import replay
+
+    df = _rows(spark, rows)
+    if op == "INSERT":
+        cap.capture_insert(df)
+    elif op == "UPDATE":
+        cap.capture_update(df, _rows(spark, [live[r[0]] for r in rows if r[0] in live]))
+    else:
+        cap.capture_delete(df)
+    replay(live, [(op, r[0], r) for r in rows])
+
+
+def _oracle(calls):
+    """The benchmark's sequential-replay oracle over ``(op, rows)`` calls."""
+    from perfbench.gen import replay
+
+    return replay({}, [(op, r[0], r) for op, rows in calls for r in rows])
+
+
+def _replica(target):
+    return {r["id"]: tuple(r) for r in target.read().collect()}
+
+
+def test_crash_before_the_watermark_commit_redelivers_the_batch(
+    spark, system, tmp_path
+):
+    # fault injection: replicate_changes dies after the replica version
+    # lands and before the ledger commit. The re-run re-delivers the
+    # same batch into the idempotent merge; the replica converges to the
+    # sequential replay, and every change is committed exactly once
+    calls = [
+        ("INSERT", [(i, f"u{i}", i) for i in range(1, 9)]),
+        ("UPDATE", [(2, "u2", 200), (7, "u7", 700), (50, "gone", 5)]),
+        ("DELETE", [(3, "u3", 3), (8, "u8", 8)]),
+        ("INSERT", [(3, "again", 33)]),
+    ]
+    cap, live = system.capture, {}
+    for op, rows in calls:
+        _capture(spark, cap, op, rows, live)
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+
+    crashed = []
+
+    def crash(wm):
+        crashed.append(wm)
+        raise RuntimeError("crash before the watermark commit")
+
+    cap.commit_watermark = crash
+    with pytest.raises(RuntimeError, match="crash"):
+        rep.replicate_changes(batch_size=5)
+    del cap.commit_watermark
+    assert len(target.list_versions()) == 1  # the replica version landed
+    assert cap.ledger() == []
+    assert system.get_pending_changes().count() == 14  # nothing marked
+
+    applied = []
+    while n := rep.replicate_changes(batch_size=5):
+        applied.append(n)
+    assert applied == [5, 5, 4]
+    wms = [wm for wm, _ in cap.ledger()]
+    assert wms[0] == crashed[0]  # the crashed batch, re-delivered
+    assert wms == sorted(set(wms))
+    assert wms[-1] == max(r["cdc_id"] for r in system.read_log().collect())
+    assert _replica(target) == _oracle(calls)
+
+
+def test_capture_during_replication_is_neither_lost_nor_applied_twice(
+    spark, system, tmp_path
+):
+    # fault injection: captures land while a round is between its poll
+    # and its watermark commit. Their ids are above the polled batch, so
+    # the commit leaves them pending and the next round applies them
+    cap, live = system.capture, {}
+    before = [
+        ("INSERT", [(i, f"u{i}", i) for i in range(1, 6)]),
+        ("UPDATE", [(1, "u1", 100)]),
+    ]
+    during = [
+        ("UPDATE", [(2, "u2", 200), (1, "u1", 111)]),
+        ("DELETE", [(5, "u5", 5)]),
+        ("INSERT", [(9, "u9", 9), (4, "u4b", 44)]),
+    ]
+    for op, rows in before:
+        _capture(spark, cap, op, rows, live)
+
+    class CapturingTable(SnapshotTable):
+        in_flight = list(during)
+
+        def write(self, df, meta=None):
+            while self.in_flight:
+                _capture(spark, cap, *self.in_flight.pop(0), live)
+            super().write(df, meta)
+
+    target = CapturingTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+    assert rep.replicate_changes() == 6
+    assert _replica(target) == _oracle(before)
+    assert system.get_pending_changes().count() == 5
+    assert rep.replicate_changes() == 5
+    assert rep.replicate_changes() == 0
+    assert _replica(target) == _oracle(before + during)
