@@ -49,30 +49,26 @@ class SnapshotTable:
         return os.path.exists(self._current_file())
 
     def read(self) -> DataFrame:
+        """The live version, in the declared schema (an empty frame
+        before the first write)."""
         if not self.exists():
             return self.spark.createDataFrame([], self.schema)
         with open(self._current_file()) as f:
-            version = f.readline().strip()
-        df = self.spark.read.parquet(os.path.join(self.path, version))
-        # Schema reconciliation: snapshots written before an additive
-        # evolution lack the new columns — pad them with typed nulls so
-        # every reader sees the declared schema (Delta/Iceberg read-time
-        # schema projection, minimal edition). evolve() forbids drops,
-        # so declared ⊇ stored always holds.
-        missing = [f for f in self.schema.fields if f.name not in df.columns]
-        if missing:
-            df = df.select(
-                "*",
-                *[
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in missing
-                ],
-            )
-        return df.select(*[f.name for f in self.schema.fields])
+            return self._scan(f.readline().strip())
+
+    def _scan(self, version: str) -> DataFrame:
+        # Reading with the declared schema needs no schema-inference job,
+        # and the parquet reader returns typed nulls for declared columns
+        # a file lacks: snapshots written before an additive evolution
+        # read with nulls in the new columns (Delta/Iceberg read-time
+        # schema projection, minimal edition). Evolution is additive
+        # (SchemaRegistry.evolve rejects drops and type changes), so each
+        # stored column matches its declaration.
+        return self.spark.read.schema(self.schema).parquet(os.path.join(self.path, version))
 
     def evolve(self, new_schema: T.StructType) -> None:
         """Adopt an additively-evolved schema; existing snapshots are
-        untouched and reconcile at read time (see :meth:`read`)."""
+        untouched and read with nulls in the new columns (see :meth:`read`)."""
         self.schema = new_schema
 
     def meta(self) -> dict[str, str]:
@@ -109,18 +105,11 @@ class SnapshotTable:
             return [ln.strip() for ln in f if ln.strip()]
 
     def read_version(self, version: str) -> DataFrame:
-        """Time travel: read a specific committed version (same
-        read-time schema reconciliation as :meth:`read`)."""
+        """Time travel: read a specific committed version, in the
+        declared schema like :meth:`read`."""
         if version not in self.list_versions():
             raise ValueError(f"unknown version {version!r} for {self.path}")
-        df = self.spark.read.parquet(os.path.join(self.path, version))
-        missing = [f for f in self.schema.fields if f.name not in df.columns]
-        if missing:
-            df = df.select(
-                "*",
-                *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing],
-            )
-        return df.select(*[f.name for f in self.schema.fields])
+        return self._scan(version)
 
     def changes_between(
         self, from_version: str, to_version: str, key: str
@@ -334,13 +323,14 @@ class SCD2Replicator:
 class CDCMonitor:
     """≅ cdc_system.py:353-393."""
 
-    def __init__(self, system: CDCSystem, pending_threshold: int = 1000):
+    def __init__(self, system: CDCSystem):
         self.system = system
-        self.pending_threshold = pending_threshold
 
     def get_health_report(self) -> dict[str, Any]:
+        """Health is ``"warning"`` from ``config.health_pending_threshold``
+        pending changes on."""
         return _monitor.get_health_report(
-            self.system.read_log(), pending_threshold=self.pending_threshold
+            self.system.read_log(), self.system.config.health_pending_threshold
         )
 
     def get_replication_lag(self) -> dict[str, Any]:

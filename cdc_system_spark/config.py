@@ -2,14 +2,16 @@
 
 Mirrors the reference's ``config.py`` (reference: config.py:7-62) — same
 field names and the same ``CDC_*`` environment-variable overrides — so a
-user of the reference can carry their .env across. Spark-specific knobs
-(shuffle partitions, AQE) are additive.
+user of the reference can carry their .env across. Spark-side knobs are
+parameters where they are used: shuffle partitions and AQE of
+``get_spark``, the key column of ``CDCSystem.setup_cdc``, the dead-letter
+sink of ``StreamingReplicator``.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import Enum
 
 
@@ -83,12 +85,8 @@ class CDCConfig:
     # reference claims trigger|timestamp|version (config.py:47); all three
     # are real here: cdf-style log append, timestamp filter, snapshot diff.
     capture_strategy: str = "log"
-    # health threshold (reference: cdc_system.py:373)
+    # health threshold (reference: cdc_system.py:373), read by CDCMonitor
     health_pending_threshold: int = 1000
-    # Spark-side additions
-    shuffle_partitions: int = 32
-    key_column: str = "id"
-    dead_letter_path: str | None = None
 
     @classmethod
     def from_env(cls) -> "CDCConfig":

@@ -2,9 +2,9 @@
 
 ≅ ``CDCMonitor`` (reference: cdc_system.py:353-393). One rollup
 aggregation produces per-operation stats and the grand total in a single
-pass; the report dict shape and the ``pending < 1000 → healthy``
-threshold match ``get_health_report`` (cdc_system.py:359-376, threshold
-at :373).
+pass; the report dict shape and the ``pending < threshold → healthy``
+rule match ``get_health_report`` (cdc_system.py:359-376; the reference's
+threshold of 1000 at :373 is ``CDCConfig.health_pending_threshold``).
 """
 
 from __future__ import annotations
@@ -12,14 +12,12 @@ from __future__ import annotations
 from datetime import datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 from cdc_system_spark.operators.changelog import change_statistics_rollup
 
 
-def get_change_statistics(log: DataFrame) -> dict[str, dict[str, int]]:
-    """Per-operation {total, pending, synced} dict (cdc_system.py:248-268)."""
-    rows = change_statistics_rollup(log).collect()
+def _per_operation(rows: list[Row]) -> dict[str, dict[str, int]]:
     return {
         r["operation"]: {"total": r["count"], "pending": r["pending"], "synced": r["synced"]}
         for r in rows
@@ -27,25 +25,22 @@ def get_change_statistics(log: DataFrame) -> dict[str, dict[str, int]]:
     }
 
 
-def get_health_report(log: DataFrame, pending_threshold: int = 1000) -> dict[str, Any]:
+def get_change_statistics(log: DataFrame) -> dict[str, dict[str, int]]:
+    """Per-operation {total, pending, synced} dict (cdc_system.py:248-268)."""
+    return _per_operation(change_statistics_rollup(log).collect())
+
+
+def get_health_report(log: DataFrame, pending_threshold: int) -> dict[str, Any]:
     rows = change_statistics_rollup(log).collect()
-    per_op: dict[str, dict[str, int]] = {}
-    total = pending = synced = 0
-    for r in rows:
-        if r["operation"] is None:
-            total, pending, synced = r["count"], r["pending"], r["synced"]
-        else:
-            per_op[r["operation"]] = {
-                "total": r["count"],
-                "pending": r["pending"],
-                "synced": r["synced"],
-            }
+    # the rollup's operation=NULL row is the grand total (absent for an empty log)
+    total = next((r for r in rows if r["operation"] is None), None)
+    n, pending, synced = (total["count"], total["pending"], total["synced"]) if total else (0, 0, 0)
     return {
         "timestamp": datetime.now(timezone.utc).isoformat(),
-        "total_changes": total,
+        "total_changes": n,
         "pending_changes": pending,
         "synced_changes": synced,
-        "statistics": per_op,
+        "statistics": _per_operation(rows),
         "health_status": "healthy" if pending < pending_threshold else "warning",
     }
 

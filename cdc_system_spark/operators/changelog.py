@@ -99,6 +99,15 @@ def mark_synced(log: DataFrame, ledger: Sequence[tuple[int, datetime]]) -> DataF
     )
 
 
+def _stat_aggs() -> list[Column]:
+    """``count``/``pending``/``synced`` of a group of log rows."""
+    return [
+        F.count("*").alias("count"),
+        F.sum(F.when(~F.col("synced"), 1).otherwise(0)).alias("pending"),
+        F.sum(F.when(F.col("synced"), 1).otherwise(0)).alias("synced"),
+    ]
+
+
 def change_statistics(log: DataFrame) -> DataFrame:
     """Per-operation totals + pending/synced breakdown.
 
@@ -109,11 +118,7 @@ def change_statistics(log: DataFrame) -> DataFrame:
                SUM(CASE WHEN synced = 1 THEN 1 ELSE 0 END) as synced
         FROM {cdc} GROUP BY operation
     """
-    return log.groupBy("operation").agg(
-        F.count("*").alias("count"),
-        F.sum(F.when(~F.col("synced"), 1).otherwise(0)).alias("pending"),
-        F.sum(F.when(F.col("synced"), 1).otherwise(0)).alias("synced"),
-    )
+    return log.groupBy("operation").agg(*_stat_aggs())
 
 
 def change_statistics_rollup(log: DataFrame) -> DataFrame:
@@ -123,8 +128,4 @@ def change_statistics_rollup(log: DataFrame) -> DataFrame:
     (cdc_system.py:363-364); ``rollup`` produces both grouping levels in
     a single aggregation (operation=NULL row = grand total).
     """
-    return log.rollup("operation").agg(
-        F.count("*").alias("count"),
-        F.sum(F.when(~F.col("synced"), 1).otherwise(0)).alias("pending"),
-        F.sum(F.when(F.col("synced"), 1).otherwise(0)).alias("synced"),
-    )
+    return log.rollup("operation").agg(*_stat_aggs())

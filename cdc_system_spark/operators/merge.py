@@ -14,13 +14,17 @@ per cdc_system.py:331-343):
 * the last change overall supplies the *image*;
 * a batch of only UPDATEs applies iff the key already exists in target.
 
-``net_effect_reduce`` computes exactly that in one window pass (single
-shuffle on the key). Equivalence to row-at-a-time replay is proven by a
+``net_effect_reduce`` computes exactly that in one hash aggregation
+(single shuffle on the key); ``apply_changes`` then applies the net
+batch in one pass over the target: a left join against the broadcast
+batch keeps, replaces or drops each target row, and the UPSERT images
+are appended. Equivalence to row-at-a-time replay is proven by a
 seeded property test (tests/test_merge.py, SURVEY §5.3#3).
 
 Scale: the change batch is typically tiny next to the target, so the
-anti/semi joins broadcast the batch side — the 100 TB target is never
-shuffled. AQE picks the strategy when the batch is large.
+join always broadcasts the batch side and the target is scanned once
+and never shuffled, whatever ``autoBroadcastJoinThreshold`` says — the
+100 TB target stays where it is.
 """
 
 from __future__ import annotations
@@ -84,41 +88,33 @@ def apply_changes(
 
     ``changes`` is an audit-schema DataFrame with a typed ``new`` struct
     column (decoded row image, NULL for DELETE) whose fields match the
-    target's columns. Internally net-effect-reduces, then:
+    target's columns. Internally net-effect-reduces, then left-joins the
+    target with the broadcast net batch on the key:
 
-    * target rows whose key is touched by UPSERT/DELETE, or by a
-      matching UPDATE_IF_EXISTS → removed (anti join, batch broadcast)
-    * UPSERT images → inserted
-    * UPDATE_IF_EXISTS images → inserted only for keys present in target
-      (semi join)
+    * no match → the target row is kept as is
+    * UPDATE_IF_EXISTS match → the row takes the batch image
+    * UPSERT or DELETE match → the row is dropped
+
+    and appends the UPSERT images.
     """
-    # The reduced batch feeds four branches (upserts/deletes/cond-updates/
-    # removed-keys); without truncating lineage Catalyst recomputes the
-    # groupBy per branch (16 shuffles at sf0.001, PLANS.md r1).
-    # localCheckpoint materializes the tiny net batch once. Eager: an A/B
-    # at sf0.1 (interleaved min-of-5, same session) measured eager 0.99 s
-    # vs lazy 1.02 s vs cache 0.91 s — cache is fastest but pins blocks
-    # until LRU eviction (a library primitive must not leak cache
-    # entries); eager keeps ContextCleaner-managed cleanup and the same
-    # 7-exchange plan.
+    # The reduced batch feeds two consumers (the broadcast join side and
+    # the appended UPSERT images); without truncating lineage Catalyst
+    # recomputes the groupBy per consumer. localCheckpoint materializes
+    # the tiny net batch once. Eager: an A/B at sf0.1 (interleaved
+    # min-of-5, same session) measured eager 0.99 s vs lazy 1.02 s vs
+    # cache 0.91 s — cache is fastest but pins blocks until LRU eviction
+    # (a library primitive must not leak cache entries); eager keeps
+    # ContextCleaner-managed cleanup.
     net = net_effect_reduce(changes, key=change_key).localCheckpoint(eager=True)
-
-    upserts = net.filter(F.col("effect") == "UPSERT")
-    deletes = net.filter(F.col("effect") == "DELETE")
-    cond_updates = net.filter(F.col("effect") == "UPDATE_IF_EXISTS")
-
-    # conditional updates that actually hit an existing key
-    target_keys = target.select(F.col(key).alias(change_key))
-    cond_hits = cond_updates.join(target_keys, on=change_key, how="left_semi")
-
-    removed_keys = (
-        upserts.select(change_key)
-        .unionByName(deletes.select(change_key))
-        .unionByName(cond_hits.select(change_key))
-        .distinct()
-        .select(F.col(change_key).alias(key))
+    # renamed so that a target column called ``new`` or ``effect`` cannot clash
+    net = net.select(
+        F.col(change_key).alias("_k"), F.col("effect").alias("_effect"), F.col("new").alias("_new")
     )
-    survivors = target.join(F.broadcast(removed_keys), on=key, how="left_anti")
 
-    incoming = upserts.unionByName(cond_hits).select(F.col("new.*"))
-    return survivors.unionByName(incoming)
+    hit = F.col("_k").isNotNull()
+    joined = target.join(F.broadcast(net), target[key] == net["_k"], "left")
+    kept = joined.filter(~hit | (F.col("_effect") == "UPDATE_IF_EXISTS")).select(
+        *[F.when(hit, F.col(f"_new.{c}")).otherwise(target[c]).alias(c) for c in target.columns]
+    )
+    upserts = net.filter(F.col("_effect") == "UPSERT").select(F.col("_new.*"))
+    return kept.unionByName(upserts)

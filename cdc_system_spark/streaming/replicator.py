@@ -43,7 +43,8 @@ def decode_with_dead_letter(
     (cdc_system.py:308-310). PERMISSIVE-mode ``from_json`` yields an
     all-null struct (not NULL) for malformed input, so the practical
     validity test is a null decoded key — which is also exactly the
-    rows the merge could not apply.
+    rows the merge could not apply. Every other row is returned; a row
+    whose test is NULL (a NULL ``operation``) counts as good.
     """
     decoded = batch.withColumns(
         {
@@ -51,14 +52,14 @@ def decode_with_dead_letter(
             "new": F.from_json("new_data", row_schema),
         }
     )
-    bad = decoded.filter(
+    is_bad = F.coalesce(
         (F.col("operation") != "DELETE")
-        & (F.col("new").isNull() | F.col(f"new.{key}").isNull())
+        & (F.col("new").isNull() | F.col(f"new.{key}").isNull()),
+        F.lit(False),
     )
     if dead_letter_path is not None:
-        bad_rows = bad.drop("old", "new")
-        bad_rows.write.mode("append").parquet(dead_letter_path)
-    return decoded.join(bad.select("cdc_id"), on="cdc_id", how="left_anti")
+        decoded.filter(is_bad).drop("old", "new").write.mode("append").parquet(dead_letter_path)
+    return decoded.filter(~is_bad)
 
 
 class StreamingReplicator:

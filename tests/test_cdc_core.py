@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_system_spark.api import CDCMonitor, CDCReplicator, CDCSystem, SnapshotTable
+from cdc_system_spark.config import CDCConfig
 from cdc_system_spark.operators.changelog import change_statistics, pending_changes
 
 TEST_SCHEMA = T.StructType(
@@ -211,6 +212,7 @@ def test_schema_evolution_end_to_end(spark, system, tmp_path):
 
     system.capture.capture_insert(_rows(spark, [(1, "old", 100), (2, "old2", 200)]))
     assert repl.replicate_changes() == 2
+    (v_before,) = target.list_versions()
 
     # ALTER TABLE ADD COLUMN email
     system.evolve_schema(EVOLVED_SCHEMA)
@@ -229,12 +231,44 @@ def test_schema_evolution_end_to_end(spark, system, tmp_path):
         2: ("old2", 200, None),      # pre-evolution row: padded null
         3: ("new", 300, "a@b.c"),    # post-evolution insert
     }
+    # time travel to the pre-evolution version reads in the evolved schema
+    before = target.read_version(v_before)
+    assert before.columns == EVOLVED_SCHEMA.names
+    assert {r["id"]: r["email"] for r in before.collect()} == {1: None, 2: None}
     # old log entries decode under the evolved schema (null email)
     decoded = {
         r["record_id"]: r["new"]["email"]
         for r in system.get_pending_changes(limit=1000).collect()
     }
     assert decoded == {}  # everything synced
+
+
+def test_snapshot_read_starts_no_spark_job(spark, tmp_path):
+    """The replica is read with its declared schema: no schema-inference job."""
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    target.write(_rows(spark, [(1, "a", 1), (2, "b", 2)]))
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-read", "SnapshotTable.read")
+    try:
+        df = target.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("snapshot-read")) == []
+    assert df.columns == TEST_SCHEMA.names
+    assert sorted(r["id"] for r in df.collect()) == [1, 2]
+
+
+def test_health_threshold_comes_from_config(spark, tmp_path):
+    system = CDCSystem(spark, str(tmp_path), "t", CDCConfig(health_pending_threshold=2))
+    system.setup_cdc(TEST_SCHEMA, key="id")
+    monitor = CDCMonitor(system)
+    system.capture.capture_insert(_rows(spark, [(1, "a", 1)]))
+    assert monitor.get_health_report()["health_status"] == "healthy"
+    system.capture.capture_insert(_rows(spark, [(2, "b", 2)]))
+    report = monitor.get_health_report()
+    assert report["pending_changes"] == 2
+    assert report["health_status"] == "warning"
 
 
 def test_schema_evolution_rejects_unsafe_changes(spark, system):

@@ -148,3 +148,52 @@ def test_net_effect_reduce_shape(spark):
     net = {r["record_id"]: r for r in net_effect_reduce(log).collect()}
     assert net[5]["effect"] == "UPSERT" and net[5]["new"]["name"] == "b"
     assert net[6]["effect"] == "DELETE"
+
+
+def test_apply_changes_scans_the_target_once_and_never_shuffles_it(spark, tmp_path):
+    """With automatic broadcast joins off, the merge still broadcasts the
+    net batch: the target is scanned once, with no sort-merge join and no
+    hash-partitioning exchange, so a large target is never shuffled."""
+    initial = {k: (k, f"init{k}", k * 10) for k in range(1, 41)}
+    path = str(tmp_path / "target")
+    spark.createDataFrame(list(initial.values()), ROW_SCHEMA).write.parquet(path)
+    changes = [
+        {"cdc_id": i + 1, "record_id": k, "operation": op, "new": (k, f"n{i}", i)}
+        for i, (k, op) in enumerate(
+            [(50, "INSERT"), (3, "UPDATE"), (4, "DELETE"), (99, "UPDATE"), (5, "INSERT"), (50, "UPDATE")]
+        )
+    ]
+    audit_rows = [
+        (
+            c["cdc_id"],
+            c["operation"],
+            c["record_id"],
+            None,
+            json.dumps(dict(zip(("id", "name", "value"), c["new"])))
+            if c["operation"] != "DELETE"
+            else None,
+            None,
+            False,
+            None,
+        )
+        for c in changes
+    ]
+    log = spark.createDataFrame(audit_rows, AUDIT_SCHEMA).withColumn(
+        "new", F.from_json("new_data", ROW_SCHEMA)
+    )
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        result = apply_changes(spark.read.parquet(path), log, key="id", change_key="record_id")
+        got = {r["id"]: (r["id"], r["name"], r["value"]) for r in result.collect()}
+        plan = result._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # the final plan, as it ran
+        plan = plan.toString()
+    finally:
+        spark.conf.set(conf, prev)
+    assert got == _sequential_oracle(initial, changes)
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "hashpartitioning" not in plan, plan
