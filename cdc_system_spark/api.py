@@ -23,7 +23,7 @@ from cdc_system_spark import monitor as _monitor
 from cdc_system_spark.config import CDCConfig
 from cdc_system_spark.model import SchemaRegistry
 from cdc_system_spark.operators.capture import LogCapture
-from cdc_system_spark.operators.changelog import mark_synced, pending_changes
+from cdc_system_spark.operators.changelog import mark_synced, pending_changes, synced_view
 from cdc_system_spark.operators.merge import apply_changes
 
 
@@ -185,6 +185,16 @@ class CDCSystem:
         assert self.capture is not None, "setup_cdc first"
         return mark_synced(self.capture.read_log(), self.capture.ledger())
 
+    def read_pending(
+        self, limit: int | None = None, row_schema: T.StructType | None = None
+    ) -> DataFrame:
+        """The pending poll both replicators share (:func:`pending_changes`).
+        Pending rows have no sync time, so the log derives ``synced``
+        alone (:func:`synced_view`): one comparison at any ledger length."""
+        assert self.capture is not None, "setup_cdc first"
+        log = synced_view(self.capture.read_log(), self.capture.ledger())
+        return pending_changes(log, limit=limit, row_schema=row_schema)
+
     def get_pending_changes(self, limit: int | None = None) -> DataFrame:
         """≅ cdc_system.py:199-231, decoded images included.
 
@@ -196,11 +206,16 @@ class CDCSystem:
         index buys its hot poll (cdc_system.py:209-216). With the
         ``orderBy + limit`` top-k, a poll is one scan job.
         """
-        schema = self.registry.schema(self.table_name)
-        return pending_changes(self.read_log(), limit=limit, row_schema=schema)
+        return self.read_pending(limit, self.registry.schema(self.table_name))
+
+    def log_summary(self) -> _monitor.LogSummary:
+        """Counts, bounds and sync position of the change log, from the
+        capture manifest and the ledger (``monitor.summarize``)."""
+        assert self.capture is not None, "setup_cdc first"
+        return _monitor.summarize(self.capture)
 
     def get_change_statistics(self) -> dict[str, dict[str, int]]:
-        return _monitor.get_change_statistics(self.read_log())
+        return _monitor.get_change_statistics(self.log_summary())
 
 
 def _replicate_round(
@@ -315,9 +330,7 @@ class SCD2Replicator:
         def write(batch: DataFrame) -> None:
             self.history.write(scd2_apply(self.history.read(), batch))
 
-        return _replicate_round(
-            self.source, pending_changes(self.source.read_log(), limit=batch_size), write
-        )
+        return _replicate_round(self.source, self.source.read_pending(batch_size), write)
 
 
 class CDCMonitor:
@@ -330,13 +343,13 @@ class CDCMonitor:
         """Health is ``"warning"`` from ``config.health_pending_threshold``
         pending changes on."""
         return _monitor.get_health_report(
-            self.system.read_log(), self.system.config.health_pending_threshold
+            self.system.log_summary(), self.system.config.health_pending_threshold
         )
 
     def get_replication_lag(self) -> dict[str, Any]:
         """Event-time freshness metrics (see monitor.get_replication_lag) —
         the lag dimension the reference's count-based report lacks."""
-        return _monitor.get_replication_lag(self.system.read_log())
+        return _monitor.get_replication_lag(self.system.log_summary())
 
     def print_report(self) -> None:
         _monitor.print_report(self.get_health_report())

@@ -17,9 +17,14 @@ replicator is strategy-agnostic (SURVEY §2.1 DDL3, §7.1 M4):
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import time
-from datetime import datetime, timezone
+from collections.abc import Collection
+from dataclasses import dataclass
+from datetime import datetime, timedelta, timezone
+from typing import BinaryIO, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +36,49 @@ from cdc_system_spark.model import AUDIT_SCHEMA, ChangeOp
 #: ids of one capture call never reach the next call's base
 KEY_SPAN = 1_000_000_000
 
+#: name of the capture manifest in the log directory; Spark's batch and
+#: streaming file listings (and pyarrow's) skip names that start with ``_``
+MANIFEST = "_manifest.jsonl"
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def epoch_micros(t: datetime) -> int:
+    """UTC epoch microseconds of the aware instant ``t``, as the manifest
+    stores instants."""
+    return (t - _EPOCH) // timedelta(microseconds=1)
+
+
+_log = logging.getLogger(__name__)
+
+
+class CaptureEntry(NamedTuple):
+    """One committed capture call: a line of the capture manifest."""
+
+    op: str
+    rows: int
+    #: smallest and largest ``cdc_id`` (None when ``rows`` is 0)
+    lo: int | None
+    hi: int | None
+    #: ``changed_at`` of every row of the call, UTC epoch microseconds
+    ts: int | None
+    #: ``{name: size}`` of the data files the call added
+    files: dict[str, int]
+
+
+@dataclass
+class LogFacts:
+    """The log's capture facts, split by a sync watermark ``wm``
+    (:meth:`LogCapture.facts`)."""
+
+    #: entries wholly synced (``hi <= wm``)
+    synced: list[CaptureEntry]
+    #: entries wholly pending (``lo > wm``)
+    pending: list[CaptureEntry]
+    #: data files whose rows must be read to be counted: those of the
+    #: entries that straddle ``wm``, and listed files that no entry names
+    unsettled: set[str]
+
 
 def as_changes(
     rows: DataFrame,
@@ -38,6 +86,7 @@ def as_changes(
     key: str,
     old_rows: DataFrame | None = None,
     base_cdc_id: int = 0,
+    changed_at: datetime | None = None,
 ) -> DataFrame:
     """Wrap full row images as audit-schema change rows.
 
@@ -46,6 +95,8 @@ def as_changes(
     monotonically increasing ``base_cdc_id`` (epoch-scaled, see
     LogCapture). A key outside ``[0, KEY_SPAN)`` (or NULL) fails the
     job that evaluates the rows, so a capture of it writes nothing.
+    Every row gets the instant ``changed_at`` (default: the query's
+    ``current_timestamp()``).
     """
     op = ChangeOp(operation).value
     img = F.to_json(F.struct(*[F.col(c) for c in rows.columns]))
@@ -74,7 +125,7 @@ def as_changes(
         k.alias("record_id"),
         old_img.alias("old_data"),
         img.alias("new_data"),
-        F.current_timestamp().alias("changed_at"),
+        (F.current_timestamp() if changed_at is None else F.lit(changed_at)).alias("changed_at"),
         F.lit(False).alias("synced"),
         F.lit(None).cast("timestamp").alias("sync_timestamp"),
     )
@@ -108,7 +159,38 @@ class LogCapture:
     and starts above the largest id already in the log (read once per
     instance from the parquet footers), so a restart within the same
     second never allocates an id at or below a committed watermark.
-    One writer per log at a time.
+
+    Each capture call also records what it wrote in the capture
+    manifest ``{log}/_manifest.jsonl``, one JSON line per call::
+
+        {"op": "UPDATE", "rows": 500, "lo": <min cdc_id>, "hi": <max cdc_id>,
+         "ts": <changed_at>, "files": {"part-….parquet": <bytes>, …}}
+
+    ``ts`` is UTC epoch microseconds: the call stamps all its rows with
+    one driver-side instant. The files are the data files the write
+    added to the directory listing; the row count and the ``cdc_id``
+    bounds come from their parquet footers. None of this starts a Spark
+    job. The manifest format is private to this class: readers get
+    :class:`CaptureEntry` values (:meth:`manifest`) or the entries split
+    by a watermark (:meth:`facts`).
+
+    Crash and error semantics. The line is written after the data
+    files, then flushed and fsynced. A Spark write that raises adds no
+    rows and commits no line. Once the write returns, its rows are in
+    the log, so a failure to record them (a footer read, the manifest
+    commit) is logged, not raised: a caller that retried the call would
+    capture the same changes twice. Such a failure, or a crash between
+    the data write and the line or in the middle of the line, leaves
+    files that no line names: readers ignore a trailing fragment with
+    no newline, the next capture truncates it before it appends, and
+    :meth:`facts` hands those files to the monitor to read.
+    The manifest adds facts about files; it does not decide which
+    files the log holds. The directory listing does, so the poll, the
+    replicators, the streaming source and the monitor all read the
+    same rows.
+
+    One writer per log at a time: the epoch and the manifest's
+    before/after listing both assume it.
     """
 
     #: zone count of the on-demand (synced, cdc_id) zone state
@@ -120,6 +202,7 @@ class LogCapture:
         self.key = key
         self.path = os.path.join(root, f"{table}_cdc")
         self.ledger_path = self.path + "_ledger"
+        self.manifest_path = os.path.join(self.path, MANIFEST)
         #: epoch of the last allocated base; None until bootstrapped
         #: from the log on the first capture
         self._epoch: int | None = None
@@ -134,41 +217,124 @@ class LogCapture:
 
     def _max_cdc_id(self) -> int:
         """Largest ``cdc_id`` in the log (-1 if it has none), from the
-        parquet footer statistics — driver-side, no Spark job."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        hi = -1
-        if not os.path.isdir(self.path):
-            return hi
-        for name in os.listdir(self.path):
-            if name.startswith(("_", ".")) or not name.endswith(".parquet"):
-                continue
-            file = os.path.join(self.path, name)
-            meta = pq.read_metadata(file)
-            col = meta.schema.names.index("cdc_id")
-            for i in range(meta.num_row_groups):
-                st = meta.row_group(i).column(col).statistics
-                if st is None or not st.has_min_max:  # writer kept no stats
-                    ids = pq.read_table(file, columns=["cdc_id"]).column(0)
-                    hi = max(hi, pc.max(ids).as_py())
-                    break
-                hi = max(hi, st.max)
-        return hi
+        parquet footers — driver-side, no Spark job."""
+        his = (_footer_facts(os.path.join(self.path, n))[2] for n in self.data_files())
+        return max((hi for hi in his if hi is not None), default=-1)
 
     def capture_insert(self, rows: DataFrame) -> None:
-        self._append(as_changes(rows, "INSERT", self.key, base_cdc_id=self._next_base()))
+        self._append("INSERT", rows)
 
     def capture_update(self, new_rows: DataFrame, old_rows: DataFrame) -> None:
-        self._append(
-            as_changes(new_rows, "UPDATE", self.key, old_rows, base_cdc_id=self._next_base())
-        )
+        self._append("UPDATE", new_rows, old_rows)
 
     def capture_delete(self, rows: DataFrame) -> None:
-        self._append(as_changes(rows, "DELETE", self.key, base_cdc_id=self._next_base()))
+        self._append("DELETE", rows)
 
-    def _append(self, changes: DataFrame) -> None:
+    def _append(self, op: str, rows: DataFrame, old_rows: DataFrame | None = None) -> None:
+        # the call's instant is stamped from the driver, as
+        # current_timestamp() would be, so that it is known here
+        now = datetime.now(timezone.utc)
+        changes = as_changes(
+            rows, op, self.key, old_rows, base_cdc_id=self._next_base(), changed_at=now
+        )
+        before = self.data_files()
         changes.write.mode("append").parquet(self.path)
+        # the listing holds the rows from here on: they are captured
+        try:
+            self._commit_entry(self._entry(op, now, before))
+        except Exception:
+            _log.warning(
+                "change log %s: %s capture landed but its manifest line was not"
+                " committed; the monitor reads its files instead",
+                self.path,
+                op,
+                exc_info=True,
+            )
+
+    def _entry(self, op: str, now: datetime, before: Collection[str]) -> CaptureEntry:
+        """The facts of the files the listing gained since ``before``."""
+        files = {n: size for n, size in self.data_files().items() if n not in before}
+        facts = [_footer_facts(os.path.join(self.path, name)) for name in files]
+        n = sum(count for count, _, _ in facts)
+        ids = [i for _, lo, hi in facts if lo is not None for i in (lo, hi)]
+        ts = epoch_micros(now) if n else None
+        return CaptureEntry(op, n, min(ids, default=None), max(ids, default=None), ts, files)
+
+    def data_files(self) -> dict[str, int]:
+        """``{name: size}`` of the log's data files: the names Spark's
+        file listing reads (it skips those that start with ``_`` or
+        ``.``). One ``os.scandir``; empty before the first capture."""
+        try:
+            with os.scandir(self.path) as entries:
+                return {
+                    e.name: e.stat().st_size
+                    for e in entries
+                    if not e.name.startswith(("_", ".")) and e.is_file()
+                }
+        except FileNotFoundError:
+            return {}
+
+    # -- capture manifest ----------------------------------------------------
+
+    def manifest(self) -> list[CaptureEntry]:
+        """The committed capture facts, oldest first (see the class
+        docstring). A trailing fragment with no newline is a commit torn
+        by a crash, and is not part of the manifest."""
+        try:
+            with open(self.manifest_path, "rb") as f:
+                data = f.read()
+        except FileNotFoundError:
+            return []
+        return [CaptureEntry(**json.loads(line)) for line in data.split(b"\n")[:-1]]
+
+    def facts(self, wm: int) -> LogFacts:
+        """The manifest's entries split by the sync watermark ``wm``,
+        checked against one listing of the log. The replicators drain in
+        ``cdc_id`` order, so an entry with ``hi <= wm`` is wholly synced
+        and one with ``lo > wm`` wholly pending. Raises if a file that an
+        entry names is missing or differs in size from the recorded one:
+        a corrupt log never reads as healthy."""
+        # the manifest is read before the listing, so every file a
+        # committed entry names is already listed
+        entries = self.manifest()
+        listed = self.data_files()
+        out = LogFacts([], [], set(listed))
+        for e in entries:
+            for name, size in e.files.items():
+                got = listed.get(name)
+                if got != size:
+                    found = "missing" if got is None else f"{got} bytes"
+                    raise RuntimeError(
+                        f"change log {self.path}: file {name} is {found},"
+                        f" the manifest recorded {size} bytes"
+                    )
+            out.unsettled.difference_update(e.files)
+            if not e.rows:
+                continue
+            if e.hi <= wm:
+                out.synced.append(e)
+            elif e.lo > wm:
+                out.pending.append(e)
+            else:
+                out.unsettled.update(e.files)
+        return out
+
+    def _commit_entry(self, entry: CaptureEntry) -> None:
+        line = (json.dumps(entry._asdict(), separators=(",", ":")) + "\n").encode()
+        fd = os.open(self.manifest_path, os.O_RDWR | os.O_CREAT, 0o644)
+        with os.fdopen(fd, "r+b") as f:
+            end = _complete_end(f)
+            f.truncate(end)  # a torn last line never becomes part of a commit
+            f.seek(end)
+            f.write(line)
+            f.flush()
+            os.fsync(f.fileno())
+
+    def read_files(self, names: Collection[str]) -> DataFrame:
+        """The rows of the data files ``names`` (a non-empty subset of
+        :meth:`data_files`), as captured like :meth:`read_log`."""
+        paths = [os.path.join(self.path, n) for n in names]
+        return self.spark.read.schema(AUDIT_SCHEMA).parquet(*paths)
 
     def read_log(self) -> DataFrame:
         """The log as captured: the on-disk ``synced``/``sync_timestamp``
@@ -234,6 +400,37 @@ class LogCapture:
         geo_hi = max(int(b["hi"]), geo_lo + self.NUM_ZONES - 1)
         state = log_zone_state(log, geo_lo, geo_hi, self.NUM_ZONES)
         return state, geo_lo, geo_hi, self.NUM_ZONES
+
+
+def _footer_facts(file: str) -> tuple[int, int | None, int | None]:
+    """``(rows, min cdc_id, max cdc_id)`` of one log file, from its
+    parquet footer; the ids are read only if the writer kept no
+    statistics for them."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(file)
+    col = meta.schema.names.index("cdc_id")
+    stats = [meta.row_group(i).column(col).statistics for i in range(meta.num_row_groups)]
+    if any(st is None or not st.has_min_max for st in stats):
+        ids = pq.read_table(file, columns=["cdc_id"]).column(0)
+        return meta.num_rows, pc.min(ids).as_py(), pc.max(ids).as_py()
+    if not stats:
+        return 0, None, None
+    return meta.num_rows, min(st.min for st in stats), max(st.max for st in stats)
+
+
+def _complete_end(f: BinaryIO) -> int:
+    """Offset just past the last newline of ``f`` (0 if it has none)."""
+    pos = f.seek(0, os.SEEK_END)
+    while pos > 0:
+        step = min(pos, 4096)
+        pos -= step
+        f.seek(pos)
+        i = f.read(step).rfind(b"\n")
+        if i >= 0:
+            return pos + i + 1
+    return 0
 
 
 def timestamp_capture(

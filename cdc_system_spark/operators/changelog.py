@@ -7,7 +7,8 @@ Reference behaviors re-expressed (SURVEY.md §2.2/§2.4/§2.5):
   JSON decode of old/new row images.
 * ``mark_synced``      ≅ ``mark_as_synced`` (cdc_system.py:233-246):
   derives the ``synced``/``sync_timestamp`` columns from the ledger of
-  committed sync watermarks instead of updating rows.
+  committed sync watermarks instead of updating rows; ``synced_view``
+  derives ``synced`` alone, for the poll.
 * ``change_statistics`` ≅ ``get_change_statistics`` (cdc_system.py:248-268):
   GROUP BY operation with pivoted pending/synced conditional sums.
 * ``change_statistics_rollup`` ≅ the Python-side totals rollup
@@ -77,9 +78,7 @@ def mark_synced(log: DataFrame, ledger: Sequence[tuple[int, datetime]]) -> DataF
     """
     cdc_id = F.col("cdc_id")
     if not ledger:
-        return log.withColumns(
-            {"synced": F.lit(False), "sync_timestamp": F.lit(None).cast("timestamp")}
-        )
+        return synced_view(log, ledger)
 
     def first_covering(lo: int, hi: int) -> Column:
         # sync time of the first of ledger[lo:hi] whose wm covers the row
@@ -99,7 +98,21 @@ def mark_synced(log: DataFrame, ledger: Sequence[tuple[int, datetime]]) -> DataF
     )
 
 
-def _stat_aggs() -> list[Column]:
+def synced_view(log: DataFrame, ledger: Sequence[tuple[int, datetime]]) -> DataFrame:
+    """The log with only ``synced`` derived from ``ledger`` (as in
+    :func:`mark_synced`) and ``sync_timestamp`` a typed NULL.
+
+    Exact for every pending row, whose ``sync_timestamp`` is NULL, so it
+    serves the callers that never read the sync time of a synced row:
+    the pending poll and the monitor. Its plan is one comparison with
+    the last watermark at any ledger length; :func:`mark_synced`'s CASE
+    tree grows with the ledger.
+    """
+    synced = F.col("cdc_id") <= ledger[-1][0] if ledger else F.lit(False)
+    return log.withColumns({"synced": synced, "sync_timestamp": F.lit(None).cast("timestamp")})
+
+
+def stat_aggs() -> list[Column]:
     """``count``/``pending``/``synced`` of a group of log rows."""
     return [
         F.count("*").alias("count"),
@@ -118,7 +131,7 @@ def change_statistics(log: DataFrame) -> DataFrame:
                SUM(CASE WHEN synced = 1 THEN 1 ELSE 0 END) as synced
         FROM {cdc} GROUP BY operation
     """
-    return log.groupBy("operation").agg(*_stat_aggs())
+    return log.groupBy("operation").agg(*stat_aggs())
 
 
 def change_statistics_rollup(log: DataFrame) -> DataFrame:
@@ -128,4 +141,4 @@ def change_statistics_rollup(log: DataFrame) -> DataFrame:
     (cdc_system.py:363-364); ``rollup`` produces both grouping levels in
     a single aggregation (operation=NULL row = grand total).
     """
-    return log.rollup("operation").agg(*_stat_aggs())
+    return log.rollup("operation").agg(*stat_aggs())

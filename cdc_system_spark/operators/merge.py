@@ -29,7 +29,7 @@ and never shuffled, whatever ``autoBroadcastJoinThreshold`` says — the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdc_system_spark.model import ChangeOp
@@ -37,16 +37,6 @@ from cdc_system_spark.model import ChangeOp
 _INS = ChangeOp.INSERT.value
 _UPD = ChangeOp.UPDATE.value
 _DEL = ChangeOp.DELETE.value
-
-
-def lww_reduce(changes: DataFrame, key: str = "record_id", order: str = "cdc_id") -> DataFrame:
-    """Plain last-write-wins: the single latest change row per key."""
-    w = Window.partitionBy(key).orderBy(F.col(order).desc())
-    return (
-        changes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def net_effect_reduce(

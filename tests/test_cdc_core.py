@@ -703,3 +703,216 @@ def test_capture_during_replication_is_neither_lost_nor_applied_twice(
     assert rep.replicate_changes() == 5
     assert rep.replicate_changes() == 0
     assert _replica(target) == _oracle(before + during)
+
+
+# -- the monitor's capture manifest -------------------------------------------
+
+
+def _monitor_answers(system):
+    """Change statistics, health report (without its timestamp) and lag."""
+    health = CDCMonitor(system).get_health_report()
+    del health["timestamp"]
+    return system.get_change_statistics(), health, CDCMonitor(system).get_replication_lag()
+
+
+def _scanned_answers(system):
+    """The same three answers from aggregates over the whole derived log:
+    the rollup the health report ran before the manifest, and the
+    four-way lag aggregate."""
+    from cdc_system_spark.operators.changelog import change_statistics_rollup
+
+    log = system.read_log()
+    rows = change_statistics_rollup(log).collect()
+    stats = {
+        r["operation"]: {"total": r["count"], "pending": r["pending"], "synced": r["synced"]}
+        for r in rows
+        if r["operation"] is not None
+    }
+    total = sum(s["total"] for s in stats.values())
+    pending = sum(s["pending"] for s in stats.values())
+    health = {
+        "total_changes": total,
+        "pending_changes": pending,
+        "synced_changes": total - pending,
+        "statistics": stats,
+        "health_status": "healthy"
+        if pending < system.config.health_pending_threshold
+        else "warning",
+    }
+    is_pending = ~F.col("synced")
+    r = log.agg(
+        F.max("changed_at").alias("newest"),
+        F.min(F.when(is_pending, F.col("changed_at"))).alias("oldest_pending"),
+        F.max(F.when(~is_pending, F.col("sync_timestamp"))).alias("last_sync"),
+    ).first()
+    since = lambda t: (
+        (r["newest"] - t).total_seconds() if r["newest"] is not None and t is not None else None
+    )
+    lag = {
+        "pending_changes": pending,
+        "oldest_pending_age_s": since(r["oldest_pending"]) or 0.0,
+        "last_sync_lag_s": since(r["last_sync"]),
+    }
+    return stats, health, lag
+
+
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_monitor_answers_from_the_manifest_with_no_spark_job(spark, system, tmp_path):
+    cap = system.capture
+    cap.capture_insert(_rows(spark, [(i, f"u{i}", i) for i in range(1, 7)]))
+    cap.capture_update(_rows(spark, [(2, "u2", 20)]), _rows(spark, [(2, "u2", 2)]))
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    assert CDCReplicator(system, target).replicate_changes() == 7
+    cap.capture_delete(_rows(spark, [(3, "u3", 3), (4, "u4", 4)]))
+    cap.capture_insert(_rows(spark, [(9, "u9", 9)]))
+
+    # one line per capture call, naming the files the call added
+    entries = cap.manifest()
+    assert [(e.op, e.rows) for e in entries] == [
+        ("INSERT", 6), ("UPDATE", 1), ("DELETE", 2), ("INSERT", 1),
+    ]
+    named = {n for e in entries for n in e.files}
+    assert named == set(cap.data_files()) == {n for n, _, _ in _log_files(cap)}
+
+    answers, jobs = _jobs_of(spark, "monitor-manifest", lambda: _monitor_answers(system))
+    assert jobs == []
+    assert answers == _scanned_answers(system)
+    assert answers[0] == {
+        "INSERT": {"total": 7, "pending": 1, "synced": 6},
+        "UPDATE": {"total": 1, "pending": 0, "synced": 1},
+        "DELETE": {"total": 2, "pending": 2, "synced": 0},
+    }
+
+
+def test_monitor_counts_a_data_file_that_no_manifest_line_names(spark, system, caplog):
+    # a failed manifest commit (as a crash between the data write and
+    # the commit) leaves an orphan file; the directory listing decides
+    # membership, so the poll sees its rows and the monitor counts them
+    # too. The capture itself landed, so it does not raise: a caller
+    # that retried it would capture the change twice
+    cap = system.capture
+    cap.capture_insert(_rows(spark, [(1, "a", 1), (2, "b", 2)]))
+
+    def crash(entry):
+        raise OSError("no space left before the manifest commit")
+
+    cap._commit_entry = crash
+    with caplog.at_level("WARNING", logger="cdc_system_spark.operators.capture"):
+        cap.capture_update(_rows(spark, [(1, "a", 10)]), _rows(spark, [(1, "a", 1)]))
+    del cap._commit_entry
+    assert "manifest line was not committed" in caplog.text
+    assert len(cap.manifest()) == 1
+    assert system.get_pending_changes().count() == 3
+
+    answers = _monitor_answers(system)
+    assert answers == _scanned_answers(system)
+    assert answers[0]["UPDATE"] == {"total": 1, "pending": 1, "synced": 0}
+
+
+def test_monitor_answers_are_the_same_without_the_manifest(spark, system, tmp_path):
+    cap = system.capture
+    cap.capture_insert(_rows(spark, [(i, f"u{i}", i) for i in range(1, 5)]))
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    assert CDCReplicator(system, target).replicate_changes() == 4
+    cap.capture_delete(_rows(spark, [(1, "u1", 1)]))
+    with_manifest = _monitor_answers(system)
+    os.remove(cap.manifest_path)
+    assert _monitor_answers(system) == with_manifest == _scanned_answers(system)
+
+
+def test_watermark_straddling_a_capture_call_gives_exact_counts_and_lag(
+    spark, system, tmp_path
+):
+    cap = system.capture
+    cap.capture_insert(_rows(spark, [(i, f"u{i}", i) for i in range(1, 11)]))
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    assert CDCReplicator(system, target).replicate_changes(batch_size=3) == 3
+    (entry,) = cap.manifest()
+    (wm, _), = cap.ledger()
+    assert entry.lo <= wm < entry.hi
+    answers = _monitor_answers(system)
+    assert answers == _scanned_answers(system)
+    assert answers[0] == {"INSERT": {"total": 10, "pending": 7, "synced": 3}}
+    assert answers[2]["last_sync_lag_s"] is not None
+
+
+def test_torn_manifest_line_is_ignored_and_truncated_by_the_next_capture(spark, system):
+    cap = system.capture
+    cap.capture_insert(_rows(spark, [(1, "a", 1)]))
+    # a crash in the middle of the next commit
+    with open(cap.manifest_path, "ab") as f:
+        f.write(b'{"op":"INSERT","rows":')
+    assert len(cap.manifest()) == 1
+    assert _monitor_answers(system) == _scanned_answers(system)
+
+    cap.capture_insert(_rows(spark, [(2, "b", 2)]))
+    with open(cap.manifest_path, "rb") as f:
+        data = f.read()
+    assert data.endswith(b"\n") and data.count(b"\n") == 2
+    assert [e.rows for e in cap.manifest()] == [1, 1]
+    answers, jobs = _jobs_of(spark, "monitor-torn", lambda: _monitor_answers(system))
+    assert jobs == []
+    assert answers[0] == {"INSERT": {"total": 2, "pending": 2, "synced": 0}}
+
+
+def test_manifest_answers_invariant_under_random_op_sequences(spark, system, tmp_path):
+    # property: after any interleaving of captures and partial
+    # replications, the manifest-based statistics, health and lag equal
+    # the aggregates over the whole derived log. Fixed seed, bounded ops
+    import random
+
+    from tests.hyp_budget import examples
+
+    rng = random.Random(20261018)
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+    live = {}
+    next_id = 1
+    for step in range(examples(6, 12)):
+        op = rng.choice(["insert", "insert", "update", "delete", "replicate"])
+        if op == "insert":
+            rows = [(next_id + i, f"u{next_id + i}", next_id + i) for i in range(rng.randint(1, 4))]
+            next_id += len(rows)
+            system.capture.capture_insert(_rows(spark, rows))
+            live.update({r[0]: r for r in rows})
+        elif op == "update" and live:
+            k = rng.choice(sorted(live))
+            old, new = live[k], (k, live[k][1], live[k][2] + 1000)
+            system.capture.capture_update(_rows(spark, [new]), _rows(spark, [old]))
+            live[k] = new
+        elif op == "delete" and live:
+            k = rng.choice(sorted(live))
+            system.capture.capture_delete(_rows(spark, [live.pop(k)]))
+        elif op == "replicate":
+            rep.replicate_changes(batch_size=rng.randint(1, 5))
+        assert _monitor_answers(system) == _scanned_answers(system), f"step {step} ({op})"
+
+
+def test_poll_plan_has_no_case_tree_at_a_long_ledger(spark, system):
+    # pending rows have no sync time, so the poll derives only `synced`:
+    # its plan holds no per-entry CASE tree, whatever the ledger length
+    from datetime import datetime, timedelta, timezone
+
+    cap = system.capture
+    cap.capture_insert(_rows(spark, [(1, "a", 1), (2, "b", 2)]))
+    synced_hi = max(r["cdc_id"] for r in system.read_log().collect())
+    cap.capture_insert(_rows(spark, [(3, "c", 3)]))
+    t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
+    wms = list(range(1999)) + [synced_hi]
+    with open(cap.ledger_path, "w") as f:
+        f.writelines(f"{w}\t{(t0 + timedelta(seconds=i)).isoformat()}\n" for i, w in enumerate(wms))
+    assert len(cap.ledger()) == 2000
+
+    poll = system.get_pending_changes()
+    assert [r["record_id"] for r in poll.collect()] == [3]
+    assert "CASE WHEN" not in poll._jdf.queryExecution().optimizedPlan().toString()
