@@ -12,8 +12,8 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Callable
-from typing import Any
+from collections.abc import Callable, Iterable
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,19 +21,79 @@ from pyspark.sql import types as T
 
 from cdc_system_spark import monitor as _monitor
 from cdc_system_spark.config import CDCConfig
-from cdc_system_spark.model import SchemaRegistry
+from cdc_system_spark.model import AUDIT_SCHEMA, SchemaRegistry
 from cdc_system_spark.operators.capture import LogCapture
 from cdc_system_spark.operators.changelog import mark_synced, pending_changes, synced_view
-from cdc_system_spark.operators.merge import apply_changes
+from cdc_system_spark.operators.merge import apply_changes, fold_changes
+
+
+#: the columns of a delta version: the change rows of one merged batch
+_DELTA_COLUMNS = ("cdc_id", "operation", "record_id", "new")
+
+
+class _Chain(NamedTuple):
+    """A committed version of a :class:`SnapshotTable`: the full snapshot
+    ``base`` and the deltas committed on it since, oldest first, which
+    merge on the replica column ``key``."""
+
+    base: str
+    key: str | None = None
+    deltas: tuple[str, ...] = ()
+
+    @property
+    def name(self) -> str:
+        return self.deltas[-1] if self.deltas else self.base
+
+    def line(self) -> str:
+        return "\t".join((self.base, self.key, *self.deltas)) if self.deltas else self.base
+
+    @classmethod
+    def parse(cls, line: str) -> _Chain:
+        base, *rest = line.rstrip("\n").split("\t")
+        return cls(base, rest[0], tuple(rest[1:])) if rest else cls(base)
 
 
 class SnapshotTable:
-    """A mutable table as versioned parquet snapshots (no Delta in env).
+    """A mutable table as versioned parquet directories (no Delta in env).
 
-    Writes go to ``{path}/v{n}``; ``{path}/_CURRENT`` names the live
-    version (write-new-then-flip ≈ atomic swap). Readers always see a
-    complete snapshot. At scale this is the same pattern as
-    Delta/Iceberg's version pointer, minimal edition.
+    Layout. Every commit writes one new directory and then flips
+    ``{path}/_CURRENT``. :meth:`write` writes a full snapshot
+    ``{path}/v{id}``. :meth:`merge_changes` writes a delta ``{path}/d{id}``
+    that holds only the batch's change rows ``(cdc_id, operation,
+    record_id, new)``. A version is a chain: a snapshot, the key the
+    deltas merge on, and the deltas committed on that snapshot since,
+    oldest first. The first line of ``_CURRENT`` is the live chain
+    (``base``, or ``base<TAB>key<TAB>d…<TAB>d…``); the commit's metadata
+    follows it (:meth:`meta`). ``{path}/_VERSIONS`` gets every commit's
+    chain, in commit order, which is what time travel reads. This is
+    Delta/Iceberg's merge-on-read with a version pointer, minimal
+    edition.
+
+    Compaction, one rule and no setting: before a :meth:`merge_changes`
+    commit, if the deltas on the base already hold at least as many bytes
+    as the base, the commit writes a full snapshot instead — the fold of
+    the base, those deltas and the batch — and starts a new chain. Each
+    commit still makes exactly one version. So a commit writes the batch,
+    plus one replica rewrite per base's worth of deltas, and a read never
+    scans more than about twice the base.
+
+    Reads. :meth:`read` and :meth:`read_version` return
+    ``fold_changes(base, union(deltas))`` (operators/merge.py): the
+    net-effect merge the replicators apply, over the deltas' changes in
+    ``cdc_id`` order. Both are lazy plans in the declared schema and
+    start no Spark job; a snapshot or a delta written before
+    :meth:`evolve` reads with nulls in the new columns and fields.
+
+    Crash semantics. A commit is the flip of ``_CURRENT`` (temporary
+    file, then ``os.replace``), so readers see the old chain or the new
+    one. A crash before the flip leaves a directory that no chain names;
+    it is never read, and a re-run commits a new one (nothing deletes
+    superseded directories yet). ``_VERSIONS`` is appended after the
+    flip. A batch committed twice — a crash after the flip, before the
+    caller records its progress — is harmless: the fold replays each of
+    its changes twice in a row, which has the effect of once.
+
+    One writer at a time.
     """
 
     def __init__(self, spark: SparkSession, path: str, schema: T.StructType):
@@ -48,26 +108,51 @@ class SnapshotTable:
     def exists(self) -> bool:
         return os.path.exists(self._current_file())
 
+    def _chain(self) -> _Chain:
+        with open(self._current_file()) as f:
+            return _Chain.parse(f.readline())
+
     def read(self) -> DataFrame:
         """The live version, in the declared schema (an empty frame
         before the first write)."""
         if not self.exists():
             return self.spark.createDataFrame([], self.schema)
-        with open(self._current_file()) as f:
-            return self._scan(f.readline().strip())
+        return self._fold(self._chain())
 
-    def _scan(self, version: str) -> DataFrame:
+    def _fold(self, chain: _Chain) -> DataFrame:
         # Reading with the declared schema needs no schema-inference job,
         # and the parquet reader returns typed nulls for declared columns
-        # a file lacks: snapshots written before an additive evolution
-        # read with nulls in the new columns (Delta/Iceberg read-time
-        # schema projection, minimal edition). Evolution is additive
-        # (SchemaRegistry.evolve rejects drops and type changes), so each
-        # stored column matches its declaration.
-        return self.spark.read.schema(self.schema).parquet(os.path.join(self.path, version))
+        # and struct fields a file lacks: versions written before an
+        # additive evolution read with nulls in the new columns
+        # (Delta/Iceberg read-time schema projection, minimal edition).
+        # Evolution is additive (SchemaRegistry.evolve rejects drops and
+        # type changes), so each stored column matches its declaration.
+        base = self.spark.read.schema(self.schema).parquet(self._dir(chain.base))
+        if not chain.deltas:
+            return base
+        delta_schema = T.StructType(
+            [AUDIT_SCHEMA[c] for c in _DELTA_COLUMNS[:-1]] + [T.StructField("new", self.schema)]
+        )
+        deltas = self.spark.read.schema(delta_schema).parquet(*map(self._dir, chain.deltas))
+        return fold_changes(base, deltas, key=chain.key)
+
+    def _dir(self, version: str) -> str:
+        return os.path.join(self.path, version)
+
+    def _bytes(self, versions: Iterable[str]) -> int:
+        """Bytes of the data files of ``versions``."""
+        total = 0
+        for v in versions:
+            with os.scandir(self._dir(v)) as entries:
+                total += sum(
+                    e.stat().st_size
+                    for e in entries
+                    if e.is_file() and not e.name.startswith(("_", "."))
+                )
+        return total
 
     def evolve(self, new_schema: T.StructType) -> None:
-        """Adopt an additively-evolved schema; existing snapshots are
+        """Adopt an additively-evolved schema; existing versions are
         untouched and read with nulls in the new columns (see :meth:`read`)."""
         self.schema = new_schema
 
@@ -83,33 +168,61 @@ class SnapshotTable:
         return dict(line.split("=", 1) for line in lines[1:] if "=" in line)
 
     def write(self, df: DataFrame, meta: dict[str, str] | None = None) -> None:
+        """Commit ``df`` as a full snapshot; it starts a new chain."""
         version = f"v{uuid.uuid4().hex[:12]}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, version))
+        df.write.mode("overwrite").parquet(self._dir(version))
+        self._commit(_Chain(version), meta)
+
+    def merge_changes(self, changes: DataFrame, key: str) -> None:
+        """Commit a change batch: ``changes`` (audit-schema rows with the
+        typed ``new`` image, its fields the replica's columns) merged
+        into the table on the replica column ``key``, with the semantics
+        of :func:`~cdc_system_spark.operators.merge.apply_changes`.
+
+        The batch's rows are written as a delta version. The first
+        commit, and a commit that compacts (see the class docstring),
+        writes a full snapshot instead."""
+        chain = self._chain() if self.exists() else None
+        if chain is None or self._bytes(chain.deltas) >= self._bytes([chain.base]):
+            self.write(apply_changes(self.read(), changes, key=key, change_key="record_id"))
+            return
+        if chain.deltas and chain.key != key:
+            raise ValueError(f"{self.path} merges on {chain.key!r}, not {key!r}")
+        delta = f"d{uuid.uuid4().hex[:12]}"
+        changes.select(*_DELTA_COLUMNS).write.parquet(self._dir(delta))
+        self._commit(chain._replace(key=key, deltas=(*chain.deltas, delta)))
+
+    def _commit(self, chain: _Chain, meta: dict[str, str] | None = None) -> None:
         tmp = self._current_file() + ".tmp"
         with open(tmp, "w") as f:
-            f.write(version)
+            f.write(chain.line())
             for k, v in (meta or {}).items():
                 f.write(f"\n{k}={v}")
         os.replace(tmp, self._current_file())
         # commit-ordered version log — what makes time travel and the
         # change feed (changes_between) possible on plain parquet
         with open(os.path.join(self.path, "_VERSIONS"), "a") as f:
-            f.write(version + "\n")
+            f.write(chain.line() + "\n")
 
-    def list_versions(self) -> list[str]:
-        """Version names in commit order (oldest first)."""
+    def _history(self) -> list[_Chain]:
+        """Every committed chain, in commit order (oldest first)."""
         vfile = os.path.join(self.path, "_VERSIONS")
         if not os.path.exists(vfile):
             return []
         with open(vfile) as f:
-            return [ln.strip() for ln in f if ln.strip()]
+            return [_Chain.parse(ln) for ln in f if ln.strip()]
+
+    def list_versions(self) -> list[str]:
+        """Version names in commit order (oldest first)."""
+        return [c.name for c in self._history()]
 
     def read_version(self, version: str) -> DataFrame:
-        """Time travel: read a specific committed version, in the
-        declared schema like :meth:`read`."""
-        if version not in self.list_versions():
-            raise ValueError(f"unknown version {version!r} for {self.path}")
-        return self._scan(version)
+        """Time travel: read a specific committed version, lazily and in
+        the declared schema like :meth:`read`."""
+        for chain in self._history():
+            if chain.name == version:
+                return self._fold(chain)
+        raise ValueError(f"unknown version {version!r} for {self.path}")
 
     def changes_between(
         self, from_version: str, to_version: str, key: str
@@ -219,12 +332,12 @@ class CDCSystem:
 
 
 def _replicate_round(
-    source: CDCSystem, batch: DataFrame, write: Callable[[DataFrame], None]
+    cap: LogCapture, batch: DataFrame, write: Callable[[DataFrame], None]
 ) -> int:
     """One replication round, shared by the replicators: ``write`` the
-    sink from the pending ``batch`` (oldest first), then commit the
-    batch's largest ``cdc_id`` as the sync watermark. Returns the number
-    of changes applied.
+    sink from the polled ``batch`` (oldest first), then commit the
+    batch's largest ``cdc_id`` as the sync watermark of the log ``cap``.
+    Returns the number of changes applied.
 
     Unlike the reference — which marks source rows synced *before* the
     target commit (cdc_system.py:313-315) — the watermark commits only
@@ -232,13 +345,14 @@ def _replicate_round(
     the batch into an idempotent merge instead of losing changes. No
     file of the log is touched.
     """
-    cap = source.capture
-    assert cap is not None, "setup_cdc first"
     batch = batch.cache()
     try:
         n, wm = batch.agg(F.count("*"), F.max("cdc_id")).first()
         if n:
-            write(batch)
+            # a capture that lands meanwhile refreshes the cached log scan
+            # (refreshByPath), and a re-evaluated poll may take its rows:
+            # the sink gets exactly the rows the watermark commits
+            write(batch.filter(F.col("cdc_id") <= wm))
             cap.commit_watermark(wm)
         return n
     finally:
@@ -257,7 +371,7 @@ class CDCReplicator:
         """Honor the retry config the reference declares but never uses
         (config.py:35-36: CDC_MAX_RETRIES / CDC_RETRY_DELAY). Retries
         are safe here because the whole replicate step is idempotent:
-        the target write is write-new-then-flip, and the sync watermark
+        the target commit is write-new-then-flip, and the sync watermark
         commits only after the target version lands.
         """
         import time
@@ -275,20 +389,19 @@ class CDCReplicator:
         raise last
 
     def replicate_changes(self, batch_size: int | None = None) -> int:
-        """One micro-batch: pending → net-effect merge → replica version
-        → sync watermark (see :func:`_replicate_round`).
+        """One micro-batch: pending → the batch committed to the replica
+        (``SnapshotTable.merge_changes``, a delta version) → sync
+        watermark (see :func:`_replicate_round`).
 
         Returns the number of changes applied (≅ cdc_system.py:279-318).
         """
         batch_size = batch_size or self.source.config.batch_size
 
         def write(batch: DataFrame) -> None:
-            current = self.target.read()
-            merged = apply_changes(current, batch, key=self.key, change_key="record_id")
-            self._with_retries(lambda: self.target.write(merged))
+            self._with_retries(lambda: self.target.merge_changes(batch, self.key))
 
         return _replicate_round(
-            self.source, self.source.get_pending_changes(limit=batch_size), write
+            self.source.capture, self.source.get_pending_changes(limit=batch_size), write
         )
 
 
@@ -330,7 +443,9 @@ class SCD2Replicator:
         def write(batch: DataFrame) -> None:
             self.history.write(scd2_apply(self.history.read(), batch))
 
-        return _replicate_round(self.source, self.source.read_pending(batch_size), write)
+        return _replicate_round(
+            self.source.capture, self.source.read_pending(batch_size), write
+        )
 
 
 class CDCMonitor:

@@ -201,11 +201,26 @@ class LogCapture:
         self.table = table
         self.key = key
         self.path = os.path.join(root, f"{table}_cdc")
-        self.ledger_path = self.path + "_ledger"
-        self.manifest_path = os.path.join(self.path, MANIFEST)
         #: epoch of the last allocated base; None until bootstrapped
         #: from the log on the first capture
         self._epoch: int | None = None
+
+    @classmethod
+    def at(cls, spark: SparkSession, path: str, key: str = "id") -> LogCapture:
+        """The capture of the change log at ``path``, for readers that
+        know the log by its path (the streaming replicator)."""
+        root, name = os.path.split(os.path.normpath(path))
+        cap = cls(spark, root, name.removesuffix("_cdc"), key)
+        cap.path = path
+        return cap
+
+    @property
+    def ledger_path(self) -> str:
+        return self.path + "_ledger"
+
+    @property
+    def manifest_path(self) -> str:
+        return os.path.join(self.path, MANIFEST)
 
     def _next_base(self) -> int:
         # strictly increasing per capture call, and above every id in

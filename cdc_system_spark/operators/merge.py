@@ -24,7 +24,14 @@ seeded property test (tests/test_merge.py, SURVEY §5.3#3).
 Scale: the change batch is typically tiny next to the target, so the
 join always broadcasts the batch side and the target is scanned once
 and never shuffled, whatever ``autoBroadcastJoinThreshold`` says — the
-100 TB target stays where it is.
+100 TB target stays where it is. Nor is it rewritten per batch: a
+replication round commits only its batch, as a delta version of the
+replica (``SnapshotTable.merge_changes``), and reads fold the deltas
+over the last full snapshot with :func:`fold_changes`, the lazy form of
+the same merge. Because the net-effect reduction composes (replaying
+two batches in ``cdc_id`` order is replaying their union), folding the
+union of the deltas equals applying them one by one; the full rewrite
+happens once per base's worth of delta bytes (compaction).
 """
 
 from __future__ import annotations
@@ -96,6 +103,29 @@ def apply_changes(
     # (a library primitive must not leak cache entries); eager keeps
     # ContextCleaner-managed cleanup.
     net = net_effect_reduce(changes, key=change_key).localCheckpoint(eager=True)
+    return _apply_net(target, net, key, change_key)
+
+
+def fold_changes(
+    target: DataFrame,
+    changes: DataFrame,
+    key: str = "id",
+    change_key: str = "record_id",
+) -> DataFrame:
+    """:func:`apply_changes` as a lazy plan: the same merge, and no Spark
+    job until the result is evaluated. The net batch is not checkpointed;
+    its two consumers plan the same aggregation, and Spark's exchange
+    reuse runs that shuffle once, so ``changes`` is scanned once. This is
+    the read side of a merge-on-read table (``SnapshotTable.read``)."""
+    # the join infers this filter for its side; stating it for both
+    # consumers makes their shuffles identical, which exchange reuse
+    # needs. Capture rejects a NULL key (capture.as_changes), so no
+    # change is lost to it.
+    keyed = changes.filter(F.col(change_key).isNotNull())
+    return _apply_net(target, net_effect_reduce(keyed, key=change_key), key, change_key)
+
+
+def _apply_net(target: DataFrame, net: DataFrame, key: str, change_key: str) -> DataFrame:
     # renamed so that a target column called ``new`` or ``effect`` cannot clash
     net = net.select(
         F.col(change_key).alias("_k"), F.col("effect").alias("_effect"), F.col("new").alias("_new")

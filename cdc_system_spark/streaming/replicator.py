@@ -9,6 +9,10 @@ as Structured Streaming (SURVEY §2.8 S4-S8):
 * exactly-once: checkpoint offsets + idempotent net-effect merge —
   replaces the reference's mark-synced-before-target-commit seam, which
   could re-deliver or lose on crash (cdc_system.py:313-315, SURVEY §7.3#3)
+* sync state: after the target commit, each micro-batch commits its
+  largest ``cdc_id`` to the log's watermark ledger, as a
+  ``CDCReplicator`` round does, so ``CDCMonitor`` counts streamed
+  changes as synced
 * per-row error-skip (cdc_system.py:308-310) → dead-letter quarantine:
   rows whose JSON images fail schema decode are appended to a parquet
   sink instead of silently dropped (S7)
@@ -24,9 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cdc_system_spark.api import SnapshotTable
+from cdc_system_spark.api import SnapshotTable, _replicate_round
 from cdc_system_spark.config import CDCConfig
-from cdc_system_spark.operators.merge import apply_changes
+from cdc_system_spark.operators.capture import LogCapture
 from cdc_system_spark.streaming.source import read_change_stream
 
 
@@ -81,6 +85,8 @@ class StreamingReplicator:
     ):
         self.spark = spark
         self.log_path = log_path
+        #: the log's sync-watermark ledger (``{log_path}_ledger``)
+        self.log = LogCapture.at(spark, log_path)
         self.target = target
         self.row_schema = row_schema
         self.key = key
@@ -94,13 +100,19 @@ class StreamingReplicator:
         self.batches_applied = 0
 
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        decoded = decode_with_dead_letter(
-            batch, self.row_schema, self.dead_letter_path, key=self.key
-        )
-        if not decoded.isEmpty():
-            current = self.target.read()
-            merged = apply_changes(current, decoded, key=self.key, change_key="record_id")
-            self.target.write(merged)
+        """Commit the micro-batch to the target as one change batch
+        (``SnapshotTable.merge_changes``), then its largest ``cdc_id`` as
+        the log's sync watermark, as a ``CDCReplicator`` round does.
+        Dead-lettered rows count as consumed."""
+
+        def write(polled: DataFrame) -> None:
+            decoded = decode_with_dead_letter(
+                polled, self.row_schema, self.dead_letter_path, key=self.key
+            )
+            if not decoded.isEmpty():
+                self.target.merge_changes(decoded, self.key)
+
+        _replicate_round(self.log, batch, write)
         self.batches_applied += 1
         self._maybe_report(batch_id)
 

@@ -167,11 +167,11 @@ def test_replicate_retries_transient_write_failure(spark, tmp_path):
             self.attempts = 0
             self.fail_times = fail_times
 
-        def write(self, df):
+        def merge_changes(self, changes, key):
             self.attempts += 1
             if self.attempts <= self.fail_times:
                 raise IOError("transient sink outage")
-            super().write(df)
+            super().merge_changes(changes, key)
 
     cfg = CDCConfig(max_retries=3, retry_delay_seconds=0)
     system = CDCSystem(spark, str(tmp_path / "cdc"), "t", cfg)
@@ -689,11 +689,17 @@ def test_capture_during_replication_is_neither_lost_nor_applied_twice(
 
     class CapturingTable(SnapshotTable):
         in_flight = list(during)
+        in_delta: list = []
 
         def write(self, df, meta=None):
             while self.in_flight:
                 _capture(spark, cap, *self.in_flight.pop(0), live)
             super().write(df, meta)
+
+        def merge_changes(self, changes, key):
+            while self.in_delta:
+                _capture(spark, cap, *self.in_delta.pop(0), live)
+            super().merge_changes(changes, key)
 
     target = CapturingTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
     rep = CDCReplicator(system, target)
@@ -703,6 +709,30 @@ def test_capture_during_replication_is_neither_lost_nor_applied_twice(
     assert rep.replicate_changes() == 5
     assert rep.replicate_changes() == 0
     assert _replica(target) == _oracle(before + during)
+
+    # captures that land inside a delta commit: the capture refreshes
+    # the cached poll, yet the delta holds exactly the polled changes
+    bulk = ("INSERT", [(k, f"u{k}", k) for k in range(100, 300)])
+    _capture(spark, cap, *bulk, live)
+    assert rep.replicate_changes(batch_size=1000) == 200
+    assert target._chain().deltas == ()  # compacted: a 200-row base
+    polled = ("DELETE", [(9, "u9", 9)])
+    later = [("UPDATE", [(4, "u4c", 4)]), ("INSERT", [(9, "u9b", 99)])]
+    _capture(spark, cap, *polled, live)
+    target.in_delta = list(later)
+    assert rep.replicate_changes() == 1
+    assert system.get_pending_changes().count() == 2
+    assert rep.replicate_changes() == 2
+    assert rep.replicate_changes() == 0
+    assert _replica(target) == _oracle(before + during + [bulk, polled] + later)
+    import pyarrow.parquet as pq
+
+    deltas = target._chain().deltas
+    in_deltas = sorted(
+        i for d in deltas for i in pq.read_table(os.path.join(target.path, d)).column("cdc_id").to_pylist()
+    )
+    log_ids = sorted(r["cdc_id"] for r in system.read_log().collect())
+    assert len(deltas) == 2 and in_deltas == log_ids[-3:]
 
 
 # -- the monitor's capture manifest -------------------------------------------
@@ -916,3 +946,125 @@ def test_poll_plan_has_no_case_tree_at_a_long_ledger(spark, system):
     poll = system.get_pending_changes()
     assert [r["record_id"] for r in poll.collect()] == [3]
     assert "CASE WHEN" not in poll._jdf.queryExecution().optimizedPlan().toString()
+
+
+# -- the merge-on-read replica -------------------------------------------------
+
+
+def test_delta_chain_reads_the_replay_oracle_at_every_version(spark, system, tmp_path):
+    # property: random capture calls split over rounds; each round commits
+    # one version, and every version reads as the sequential replay of
+    # the calls up to it. The one-row base is soon outweighed by its
+    # deltas, so the chain compacts along the way. Fixed seed
+    import random
+
+    from tests.hyp_budget import examples
+
+    rng = random.Random(20261019)
+    cap, live = system.capture, {}
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+    calls = [("INSERT", [(1, "u1", 1)])]
+    _capture(spark, cap, *calls[0], live)
+    rep.replicate_changes()
+    versions = [_oracle(calls)]
+    for r in range(examples(4, 8)):
+        for _ in range(rng.randint(1, 3)):
+            op = rng.choice(["INSERT", "UPDATE", "DELETE"])
+            keys = rng.sample(range(1, 12), rng.randint(1, 3))
+            call = (op, [(k, f"r{r}k{k}", rng.randint(0, 99)) for k in keys])
+            _capture(spark, cap, *call, live)
+            calls.append(call)
+        rep.replicate_changes()
+        versions.append(_oracle(calls))
+        assert _replica(target) == versions[-1], f"round {r}"
+    names = target.list_versions()
+    assert len(names) == len(versions)
+    assert sum(n.startswith("v") for n in names) >= 2  # a compaction
+    assert any(n.startswith("d") for n in names)
+    for name, want in zip(names, versions):
+        assert {r["id"]: tuple(r) for r in target.read_version(name).collect()} == want, name
+
+
+def test_deltas_from_before_and_after_an_evolution_read_in_the_evolved_schema(
+    spark, system, tmp_path
+):
+    # a delta written before evolve reads with nulls in the new struct
+    # field; reading the chain starts no Spark job
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    repl = CDCReplicator(system, target, key="id")
+    system.capture.capture_insert(_rows(spark, [(i, f"u{i}", i) for i in range(1, 301)]))
+    assert repl.replicate_changes(batch_size=1000) == 300
+    system.capture.capture_update(_rows(spark, [(1, "u1b", 10)]), _rows(spark, [(1, "u1", 1)]))
+    system.capture.capture_insert(_rows(spark, [(400, "pre", 4)]))
+    assert repl.replicate_changes() == 2
+
+    system.evolve_schema(EVOLVED_SCHEMA)
+    target.evolve(EVOLVED_SCHEMA)
+    evolved = lambda rows: spark.createDataFrame(rows, EVOLVED_SCHEMA)
+    system.capture.capture_update(evolved([(2, "u2", 2, "x@y.z")]), target.read().filter("id = 2"))
+    system.capture.capture_insert(evolved([(401, "post", 5, "a@b.c")]))
+    system.capture.capture_delete(evolved([(3, "u3", 3, None)]))
+    assert repl.replicate_changes() == 3
+
+    base, pre, post = target.list_versions()
+    assert pre.startswith("d") and post.startswith("d")
+    (got, pre_df), jobs = _jobs_of(
+        spark, "chain-read", lambda: (target.read(), target.read_version(pre))
+    )
+    assert jobs == []
+    assert got.columns == pre_df.columns == EVOLVED_SCHEMA.names
+    got = {r["id"]: tuple(r) for r in got.collect()}
+    assert len(got) == 301
+    assert got[1] == (1, "u1b", 10, None)  # pre-evolution delta
+    assert got[400] == (400, "pre", 4, None)
+    assert got[2] == (2, "u2", 2, "x@y.z")  # post-evolution delta
+    assert got[401] == (401, "post", 5, "a@b.c")
+    assert got[4] == (4, "u4", 4, None) and 3 not in got
+    before = {r["id"]: tuple(r) for r in pre_df.collect()}
+    assert before[1] == (1, "u1b", 10, None) and before[3] == (3, "u3", 3, None)
+    assert 401 not in before and len(before) == 301
+
+
+def test_crash_before_the_delta_commit_leaves_an_orphan_that_reads_ignore(spark, tmp_path):
+    # fault injection: the delta directory is written, then the commit
+    # (the _CURRENT flip) dies. The orphan is never read, nothing is
+    # marked synced, and a re-run converges to the sequential replay
+    system = CDCSystem(spark, str(tmp_path), "crash_table", CDCConfig(max_retries=0))
+    cap = system.setup_cdc(TEST_SCHEMA, key="id")
+    first = [("INSERT", [(i, f"u{i}", i) for i in range(1, 41)])]
+    rest = [
+        ("UPDATE", [(2, "u2", 200), (50, "gone", 5)]),
+        ("DELETE", [(3, "u3", 3)]),
+        ("INSERT", [(3, "again", 33)]),
+    ]
+    live = {}
+    _capture(spark, cap, *first[0], live)
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+    assert rep.replicate_changes() == 40
+    for call in rest:
+        _capture(spark, cap, *call, live)
+    dirs = set(os.listdir(target.path))
+    with open(os.path.join(target.path, "_CURRENT")) as f:
+        current = f.read()
+
+    def crash(*a, **kw):
+        raise RuntimeError("crash before the commit")
+
+    target._commit = crash
+    with pytest.raises(RuntimeError, match="crash"):
+        rep.replicate_changes()
+    del target._commit
+    (orphan,) = set(os.listdir(target.path)) - dirs
+    assert orphan.startswith("d")
+    with open(os.path.join(target.path, "_CURRENT")) as f:
+        assert f.read() == current
+    assert _replica(target) == _oracle(first)
+    assert system.get_pending_changes().count() == 4
+
+    assert rep.replicate_changes() == 4
+    assert rep.replicate_changes() == 0
+    assert _replica(target) == _oracle(first + rest)
+    assert orphan not in target._chain().deltas
+    assert orphan not in target.list_versions()

@@ -292,6 +292,30 @@ def test_stream_shares_the_log_with_batch_replication(spark, system, tmp_path):
     assert rows(stream_target) == rows(batch_target) == [(1, "a", 10), (2, "b", 2), (3, "c", 3)]
 
 
+def test_stream_drain_commits_the_sync_watermark(spark, system, tmp_path):
+    # the streaming replicator commits each micro-batch's largest cdc_id,
+    # dead-lettered rows included, so the monitor sees nothing pending
+    from cdc_system_spark.api import CDCMonitor
+    from cdc_system_spark.model import AUDIT_SCHEMA
+
+    system.capture.capture_insert(_rows(spark, [(1, "a", 1), (2, "b", 2), (3, "c", 3)]))
+    top = max(r["cdc_id"] for r in system.read_log().collect())
+    bad = spark.createDataFrame(
+        [(top + 1, "INSERT", 99, None, "{not-json", None, False, None)], AUDIT_SCHEMA
+    )
+    bad.write.mode("append").parquet(system.capture.path)
+    target = SnapshotTable(spark, str(tmp_path / "t"), ROW_SCHEMA)
+    StreamingReplicator(
+        spark, system.capture.path, target, ROW_SCHEMA,
+        key="id", checkpoint_path=str(tmp_path / "ckpt"), dead_letter_path=str(tmp_path / "dead"),
+    ).run_available_now()
+    assert {r["id"] for r in target.read().collect()} == {1, 2, 3}
+    assert system.capture.ledger()[-1][0] == top + 1
+    report = CDCMonitor(system).get_health_report()
+    assert (report["pending_changes"], report["synced_changes"]) == (0, 4)
+    assert system.get_pending_changes().count() == 0
+
+
 def test_dead_letter_quarantine(spark, system, tmp_path):
     # valid insert + an insert whose new_data is not decodable JSON
     system.capture.capture_insert(_rows(spark, [(1, "ok", 1)]))
