@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from cdc_system_spark import monitor as _monitor
 from cdc_system_spark.config import CDCConfig
-from cdc_system_spark.model import AUDIT_SCHEMA, SchemaRegistry
+from cdc_system_spark.model import AUDIT_SCHEMA, SchemaRegistry, cdc_writer
 from cdc_system_spark.operators.capture import LogCapture
 from cdc_system_spark.operators.changelog import mark_synced, pending_changes, synced_view
 from cdc_system_spark.operators.merge import apply_changes, fold_changes
@@ -69,13 +69,21 @@ class SnapshotTable:
     Delta/Iceberg's merge-on-read with a version pointer, minimal
     edition.
 
+    Storage format. Snapshots and deltas are written in the CDC parquet
+    format (``model.CDC_PARQUET_OPTIONS``, zstd), which stores a replica
+    in fewer bytes than Spark's default snappy; a chain may mix files of
+    either codec, and reads need no setting.
+
     Compaction, one rule and no setting: before a :meth:`merge_changes`
     commit, if the deltas on the base already hold at least as many bytes
-    as the base, the commit writes a full snapshot instead — the fold of
-    the base, those deltas and the batch — and starts a new chain. Each
-    commit still makes exactly one version. So a commit writes the batch,
-    plus one replica rewrite per base's worth of deltas, and a read never
-    scans more than about twice the base.
+    as the base, the commit writes a full snapshot instead — one fold of
+    the base with those deltas and the batch, a single net-effect
+    aggregation and join — and starts a new chain. The rule compares the
+    compressed bytes on disk, so how often it fires follows how well
+    deltas compress next to the base. Each commit still makes exactly
+    one version. So a commit writes the batch, plus one replica rewrite
+    per base's worth of deltas, and a read never scans more than about
+    twice the base's bytes.
 
     Reads. :meth:`read` and :meth:`read_version` return
     ``fold_changes(base, union(deltas))`` (operators/merge.py): the
@@ -120,6 +128,12 @@ class SnapshotTable:
         return self._fold(self._chain())
 
     def _fold(self, chain: _Chain) -> DataFrame:
+        base, deltas = self._parts(chain)
+        return base if deltas is None else fold_changes(base, deltas, key=chain.key)
+
+    def _parts(self, chain: _Chain) -> tuple[DataFrame, DataFrame | None]:
+        """The base snapshot of ``chain`` and the union of its deltas
+        (None when it has none), as lazy scans in the declared schema."""
         # Reading with the declared schema needs no schema-inference job,
         # and the parquet reader returns typed nulls for declared columns
         # and struct fields a file lacks: versions written before an
@@ -129,12 +143,11 @@ class SnapshotTable:
         # type changes), so each stored column matches its declaration.
         base = self.spark.read.schema(self.schema).parquet(self._dir(chain.base))
         if not chain.deltas:
-            return base
+            return base, None
         delta_schema = T.StructType(
             [AUDIT_SCHEMA[c] for c in _DELTA_COLUMNS[:-1]] + [T.StructField("new", self.schema)]
         )
-        deltas = self.spark.read.schema(delta_schema).parquet(*map(self._dir, chain.deltas))
-        return fold_changes(base, deltas, key=chain.key)
+        return base, self.spark.read.schema(delta_schema).parquet(*map(self._dir, chain.deltas))
 
     def _dir(self, version: str) -> str:
         return os.path.join(self.path, version)
@@ -170,7 +183,7 @@ class SnapshotTable:
     def write(self, df: DataFrame, meta: dict[str, str] | None = None) -> None:
         """Commit ``df`` as a full snapshot; it starts a new chain."""
         version = f"v{uuid.uuid4().hex[:12]}"
-        df.write.mode("overwrite").parquet(self._dir(version))
+        cdc_writer(df).mode("overwrite").parquet(self._dir(version))
         self._commit(_Chain(version), meta)
 
     def merge_changes(self, changes: DataFrame, key: str) -> None:
@@ -183,13 +196,18 @@ class SnapshotTable:
         commit, and a commit that compacts (see the class docstring),
         writes a full snapshot instead."""
         chain = self._chain() if self.exists() else None
-        if chain is None or self._bytes(chain.deltas) >= self._bytes([chain.base]):
-            self.write(apply_changes(self.read(), changes, key=key, change_key="record_id"))
-            return
-        if chain.deltas and chain.key != key:
+        if chain is not None and chain.deltas and chain.key != key:
             raise ValueError(f"{self.path} merges on {chain.key!r}, not {key!r}")
+        if chain is None or self._bytes(chain.deltas) >= self._bytes([chain.base]):
+            # one merge of the base with its deltas and the batch
+            base, deltas = self._parts(chain) if chain is not None else (self.read(), None)
+            batch = changes.select(*_DELTA_COLUMNS)
+            if deltas is not None:
+                batch = deltas.unionByName(batch)
+            self.write(apply_changes(base, batch, key=key, change_key="record_id"))
+            return
         delta = f"d{uuid.uuid4().hex[:12]}"
-        changes.select(*_DELTA_COLUMNS).write.parquet(self._dir(delta))
+        cdc_writer(changes.select(*_DELTA_COLUMNS)).parquet(self._dir(delta))
         self._commit(chain._replace(key=key, deltas=(*chain.deltas, delta)))
 
     def _commit(self, chain: _Chain, meta: dict[str, str] | None = None) -> None:

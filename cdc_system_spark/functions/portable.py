@@ -89,23 +89,36 @@ def _estimated_bytes(df: DataFrame) -> int:
     metadata (parquet file sizes propagated through the operators),
     read without executing anything. Unknown ⇒ 0, i.e. 'small': the
     cheap repartition is the safe default for the CPU-heavy folds
-    spread() exists to protect."""
+    spread() exists to protect.
+
+    Spark never reports a size as unknown: a leaf without statistics
+    (an RDD-backed frame, a checkpoint without origin stats) reads as
+    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by default), and
+    the operators above it scale that huge figure. So a frame with such
+    a leaf is unknown, whatever its estimate."""
     try:
-        return int(
-            df._jdf.queryExecution()
-            .optimizedPlan()
-            .stats()
-            .sizeInBytes()
-            .toString()
-        )
+        plan = df._jdf.queryExecution().optimizedPlan()
+        unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+        leaves = plan.collectLeaves()
+        if any(_size(leaves.apply(i)) >= unknown for i in range(leaves.size())):
+            return 0
+        return _size(plan)
     except Exception:
         return 0
 
 
+def _size(plan) -> int:
+    # py4j hands the Scala BigInt over as a Python int
+    return int(plan.stats().sizeInBytes())
+
+
 # Logical-plan nodes that change partitioning between the leaf scan and
 # the frame (exchanges or multi-child combinators). Substring match on
-# the analyzed plan is conservative: a false positive just routes to the
-# exact-but-slower rdd probe.
+# the analyzed plan is conservative, but a false positive is not free:
+# it routes a bare scan to the size estimator (_estimated_bytes) in
+# place of the exact file count, and a scan estimated at target ×
+# _ADVISORY_BYTES or more then passes through unrepartitioned even
+# when it has fewer splits than the target.
 _EXCHANGE_NODES = (
     "Join",
     "Aggregate",

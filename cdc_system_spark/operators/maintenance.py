@@ -19,6 +19,12 @@ sorted by ``cdc_id`` within partitions:
 * **local cdc_id ordering** — min/max column stats per file make
   ``cdc_id`` range predicates skip row groups.
 
+The compacted log is written in the CDC parquet format that capture
+writes (``model.CDC_PARQUET_OPTIONS``, zstd): a change log is kept for
+ever and scanned again and again, so its JSON row images are stored in
+about 40% fewer bytes than under Spark's default snappy. The input may
+hold files of any codec; the codec is recorded per file.
+
 Compaction writes to a NEW root and swaps atomically-enough for an
 append-only log: writers keep appending to the active root; readers of
 the compacted root see a consistent prefix. (With a table format —
@@ -30,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cdc_system_spark.model import cdc_writer
 
 
 def compact_log(
@@ -48,13 +56,10 @@ def compact_log(
     days = dated.select("change_date").distinct().count()
     per_day = max(rows // max(days, 1), 1)
     files_per_day = max(per_day // target_rows_per_file, 1)
-    (
-        dated.repartition(files_per_day * max(days, 1), "change_date", F.col("cdc_id"))
-        .sortWithinPartitions("change_date", "cdc_id")
-        .write.mode("overwrite")
-        .partitionBy("change_date")
-        .parquet(out_path)
-    )
+    ordered = dated.repartition(
+        files_per_day * max(days, 1), "change_date", F.col("cdc_id")
+    ).sortWithinPartitions("change_date", "cdc_id")
+    cdc_writer(ordered).mode("overwrite").partitionBy("change_date").parquet(out_path)
     return {"rows": rows, "days": days, "files_per_day": files_per_day}
 
 

@@ -16,6 +16,8 @@
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -2036,6 +2038,17 @@ def pq_codebooks(
                 f"k={k} codebook centroids are required; pass the "
                 f"{need} smallest-id vectors (the orderBy().limit() "
                 "contract this parameter short-circuits)"
+            )
+        if len(train_vecs) < need:
+            # legitimate for a table smaller than sample_cap, which has
+            # no more vectors to give; otherwise Lloyd refinement trains
+            # on fewer samples than the orderBy().limit() path would
+            warnings.warn(
+                f"train_vecs supplies {len(train_vecs)} vectors but "
+                f"refine_iters={refine_iters} trains on up to "
+                f"sample_cap={sample_cap}; the codebooks are refined on "
+                "the vectors given",
+                stacklevel=2,
             )
         vecs = [[float(x) for x in v] for v in train_vecs]
     else:

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from cdc_system_spark.api import SnapshotTable, _replicate_round
 from cdc_system_spark.config import CDCConfig
+from cdc_system_spark.model import cdc_writer
 from cdc_system_spark.operators.capture import LogCapture
 from cdc_system_spark.streaming.source import read_change_stream
 
@@ -62,7 +63,8 @@ def decode_with_dead_letter(
         F.lit(False),
     )
     if dead_letter_path is not None:
-        decoded.filter(is_bad).drop("old", "new").write.mode("append").parquet(dead_letter_path)
+        bad = decoded.filter(is_bad).drop("old", "new")
+        cdc_writer(bad).mode("append").parquet(dead_letter_path)
     return decoded.filter(~is_bad)
 
 

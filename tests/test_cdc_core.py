@@ -1068,3 +1068,128 @@ def test_crash_before_the_delta_commit_leaves_an_orphan_that_reads_ignore(spark,
     assert _replica(target) == _oracle(first + rest)
     assert orphan not in target._chain().deltas
     assert orphan not in target.list_versions()
+
+
+def test_compaction_folds_base_deltas_and_batch_in_one_merge(spark, system, tmp_path):
+    # a compacting commit is one fold of the base with its deltas and the
+    # batch: a single net-effect merge (one join) in the written plan,
+    # not the batch merged over the already-folded chain
+    cap, live, calls = system.capture, {}, []
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+    for call in [
+        ("INSERT", [(1, "u1", 1)]),
+        ("INSERT", [(k, f"u{k}", k) for k in range(2, 40)]),
+    ]:
+        _capture(spark, cap, *call, live)
+        calls.append(call)
+        rep.replicate_changes()
+    assert len(target._chain().deltas) == 1  # the deltas outweigh the base
+
+    written = []
+    write = target.write
+    target.write = lambda df, meta=None: (written.append(df), write(df, meta))
+    for call in [("UPDATE", [(1, "u1b", 10), (5, "u5b", 50)]), ("DELETE", [(7, "u7", 7)])]:
+        _capture(spark, cap, *call, live)
+        calls.append(call)
+    rep.replicate_changes()
+    (df,) = written
+    assert target._chain().deltas == ()
+    assert df._jdf.queryExecution().optimizedPlan().toString().count("Join LeftOuter") == 1
+    assert _replica(target) == _oracle(calls)
+
+
+# -- storage format ------------------------------------------------------------
+
+
+def _codecs(*paths):
+    """The compression codecs in the footers of the parquet files
+    ``paths``; a directory stands for its data files. A file of no rows
+    has none."""
+    import pyarrow.parquet as pq
+
+    files = [
+        f
+        for p in paths
+        for f in ([p] if os.path.isfile(p) else [
+            os.path.join(p, n) for n in os.listdir(p) if n.endswith(".parquet")
+        ])
+    ]
+    out = set()
+    for f in files:
+        meta = pq.read_metadata(f)
+        out |= {
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        }
+    return out
+
+
+def _format_run(spark, root, monkeypatch, old_first):
+    """Captures, a batch round and a streaming drain; with ``old_first``
+    the first captures and the first replica snapshot are written the
+    way earlier versions wrote (Spark's defaults: snappy, v1 pages)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from cdc_system_spark import model
+    from cdc_system_spark.operators.capture import _footer_facts
+    from cdc_system_spark.streaming.replicator import StreamingReplicator
+
+    system = CDCSystem(spark, root, "fmt")
+    cap, live = system.setup_cdc(TEST_SCHEMA, key="id"), {}
+    target = SnapshotTable(spark, os.path.join(root, "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+    with monkeypatch.context() as m:
+        if old_first:
+            m.setattr(
+                model, "CDC_PARQUET_OPTIONS", {"compression": "snappy", "parquet.writer.version": "v1"}
+            )
+        _capture(spark, cap, "INSERT", [(k, f"u{k}", k) for k in range(1, 9)], live)
+        _capture(spark, cap, "UPDATE", [(2, "u2b", 20)], live)
+        assert rep.replicate_changes() == 9
+        old_files = set(cap.data_files())
+    _capture(spark, cap, "DELETE", [(3, "u3", 3)], live)
+    _capture(spark, cap, "INSERT", [(9, "u9", 9), (10, "u10", 10)], live)
+    assert rep.replicate_changes(batch_size=1) == 1  # a delta on the old base
+    _capture(spark, cap, "UPDATE", [(4, "u4b", 40)], live)
+
+    answers = _monitor_answers(system)
+    assert answers == _scanned_answers(system)
+    for name in cap.data_files():
+        ids = pq.read_table(os.path.join(cap.path, name), columns=["cdc_id"]).column(0)
+        want = (len(ids), pc.min(ids).as_py(), pc.max(ids).as_py())
+        assert _footer_facts(os.path.join(cap.path, name)) == want
+    poll = [
+        (r["operation"], r["record_id"], r["old_data"], r["new_data"])
+        for r in system.get_pending_changes().collect()
+    ]
+    log = sorted(
+        (r["operation"], r["record_id"], r["old_data"] or "", r["new_data"] or "", r["synced"])
+        for r in system.read_log().collect()
+    )
+    in_log = lambda names: [os.path.join(cap.path, n) for n in names]
+    assert _codecs(*in_log(set(cap.data_files()) - old_files)) == {"ZSTD"}
+    assert _codecs(os.path.join(target.path, target._chain().deltas[0])) == {"ZSTD"}
+    old_codec = {"SNAPPY"} if old_first else {"ZSTD"}
+    assert _codecs(*in_log(old_files)) == old_codec
+    assert _codecs(os.path.join(target.path, target._chain().base)) == old_codec
+
+    streamed = SnapshotTable(spark, os.path.join(root, "streamed"), TEST_SCHEMA)
+    StreamingReplicator(
+        spark, cap.path, streamed, TEST_SCHEMA, key="id", checkpoint_path=os.path.join(root, "ckpt")
+    ).run_available_now()
+    assert _replica(streamed) == live
+    stats, health, lag = answers
+    return stats, health, lag["pending_changes"], poll, log
+
+
+def test_a_log_and_replica_of_mixed_formats_read_as_one_format(spark, tmp_path, monkeypatch):
+    # files written by earlier versions (snappy, v1 pages) sit next to
+    # zstd files in the log and the replica chain: every reader gives the
+    # answers of a log written in the current format alone
+    mixed = _format_run(spark, str(tmp_path / "mixed"), monkeypatch, old_first=True)
+    single = _format_run(spark, str(tmp_path / "single"), monkeypatch, old_first=False)
+    assert mixed == single
+    assert mixed[1]["pending_changes"] == len(mixed[3]) == 3

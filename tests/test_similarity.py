@@ -3,6 +3,8 @@ normalization cross-checked against numpy."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -857,3 +859,17 @@ def test_auto_cells_extra_cols_passthrough(emb):
         .collect()
     }
     assert with_label == joined
+
+
+def test_pq_codebooks_warns_when_refinement_gets_fewer_than_sample_cap_vectors(spark):
+    # k <= len(train_vecs) < sample_cap with refine_iters > 0: right for a
+    # table smaller than sample_cap, so a warning, not an error
+    vecs = [[float(i), float(i % 3), float(-i), 1.0] for i in range(6)]
+    emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.warns(UserWarning, match="refine_iters=2 trains on up to sample_cap=16"):
+        books = S.pq_codebooks(emb, m=2, k=2, refine_iters=2, sample_cap=16, train_vecs=vecs)
+    assert len(books) == 2 and all(len(b) == 2 for b in books)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        S.pq_codebooks(emb, m=2, k=2, train_vecs=vecs[:2])
+        S.pq_codebooks(emb, m=2, k=2, refine_iters=2, sample_cap=6, train_vecs=vecs)
