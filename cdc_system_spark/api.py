@@ -203,7 +203,11 @@ class SnapshotTable:
             base, deltas = self._parts(chain) if chain is not None else (self.read(), None)
             batch = changes.select(*_DELTA_COLUMNS)
             if deltas is not None:
-                batch = deltas.unionByName(batch)
+                # the batch's image in the replica's field order, so the
+                # union does not depend on how unionByName resolves
+                # nested fields
+                new = F.struct(*[F.col(f"new.{c}").alias(c) for c in self.schema.names])
+                batch = deltas.unionByName(batch.withColumn("new", new))
             self.write(apply_changes(base, batch, key=key, change_key="record_id"))
             return
         delta = f"d{uuid.uuid4().hex[:12]}"

@@ -30,13 +30,13 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     A small parquet file scans as ONE input split, so any expensive
     per-row computation downstream (md5 shingling, simhash, n-gram
     explode) would run on a single core regardless of cluster size.
-    Repartition only when the input has fewer partitions than the
+    A bare scan is repartitioned only when it has fewer splits than the
     cluster's default parallelism — at real scale (100 TB → thousands of
-    splits) this is a no-op, so the shuffle cost exists only in exactly
-    the regime where it's trivially cheap (input ≪ one split).
+    splits) this is a no-op. A frame past an exchange is always
+    repartitioned (see the cases below).
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # Partitioning is ESTIMATED from the plan, never from ``df.rdd``
+    # Partitioning is decided from the plan, never from ``df.rdd``
     # on an exchange-bearing frame: under AQE, asking an
     # AdaptiveSparkPlan for its RDD materializes every intermediate
     # exchange — eager shuffle jobs inside a query CONSTRUCTOR, whose
@@ -52,73 +52,28 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     #   statusTracker). The checkpointed handoffs between pipeline
     #   stages land here and keep the exact probe.
     # - DERIVED FRAME (any exchange-inducing node — join, aggregate,
-    #   window, repartition, union): decided from the optimizer's SIZE
-    #   statistic (``optimizedPlan().stats().sizeInBytes`` — planning
-    #   metadata, no execution). A SMALL frame (est < target × the AQE
-    #   advisory partition size) is exactly the regime where AQE's
-    #   parallelism-first coalescing floors partitions at
+    #   window, repartition, union): always repartitioned. AQE's
+    #   parallelism-first coalescing floors post-exchange partitions at
     #   minPartitionSize and can starve a CPU-heavy downstream fold
     #   (measured: the minhash pass over a deduplicated version table
-    #   ran 10-way instead of 32, 3× on lsh_index_build) — and where
-    #   an explicit repartition costs at most target×advisory bytes of
-    #   shuffle, trivially cheap next to the fold it protects. A BIG
-    #   frame needs no help: anything past a real exchange already
-    #   carries ≥ bytes/parallelism ≥ advisory-sized partitions at
-    #   cluster parallelism, and an unconditional repartition would
-    #   insert a full extra shuffle in exactly the big-data regime
-    #   this helper must not tax.
+    #   ran 10-way instead of 32, 3× on lsh_index_build); the explicit
+    #   repartition is one extra shuffle of the frame. No size estimate
+    #   is consulted: Spark reports a leaf without statistics (an
+    #   RDD-backed frame) as ``spark.sql.defaultSizeInBytes``, so a
+    #   size rule would misread exactly these frames as big, and no
+    #   workload measures a derived frame large enough to skip it.
     if _bare_scan(df):
         n_files = len(df.inputFiles())
         n = n_files if n_files else df.rdd.getNumPartitions()
         return df.repartition(target) if n < target else df
-    if _estimated_bytes(df) < target * _ADVISORY_BYTES:
-        return df.repartition(target)
-    return df
-
-
-#: AQE's advisory shuffle-partition size (the session default, 64 MiB):
-#: target × this is the boundary between "an explicit repartition is
-#: trivially cheap" and "AQE already keeps post-exchange partitions at
-#: cluster parallelism" — the two regimes meet seamlessly (at the
-#: boundary, bytes/parallelism == advisory, AQE's own target).
-_ADVISORY_BYTES = 64 * 1024 * 1024
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """The optimizer's size estimate for the frame — pure planning
-    metadata (parquet file sizes propagated through the operators),
-    read without executing anything. Unknown ⇒ 0, i.e. 'small': the
-    cheap repartition is the safe default for the CPU-heavy folds
-    spread() exists to protect.
-
-    Spark never reports a size as unknown: a leaf without statistics
-    (an RDD-backed frame, a checkpoint without origin stats) reads as
-    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by default), and
-    the operators above it scale that huge figure. So a frame with such
-    a leaf is unknown, whatever its estimate."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
-        leaves = plan.collectLeaves()
-        if any(_size(leaves.apply(i)) >= unknown for i in range(leaves.size())):
-            return 0
-        return _size(plan)
-    except Exception:
-        return 0
-
-
-def _size(plan) -> int:
-    # py4j hands the Scala BigInt over as a Python int
-    return int(plan.stats().sizeInBytes())
+    return df.repartition(target)
 
 
 # Logical-plan nodes that change partitioning between the leaf scan and
 # the frame (exchanges or multi-child combinators). Substring match on
-# the analyzed plan is conservative, but a false positive is not free:
-# it routes a bare scan to the size estimator (_estimated_bytes) in
-# place of the exact file count, and a scan estimated at target ×
-# _ADVISORY_BYTES or more then passes through unrepartitioned even
-# when it has fewer splits than the target.
+# the analyzed plan is conservative: a false positive treats a bare scan
+# as derived, so it is repartitioned even when its file count already
+# reaches the target (one needless shuffle, never a starved stage).
 _EXCHANGE_NODES = (
     "Join",
     "Aggregate",

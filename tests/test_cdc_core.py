@@ -1099,6 +1099,26 @@ def test_compaction_folds_base_deltas_and_batch_in_one_merge(spark, system, tmp_
     assert _replica(target) == _oracle(calls)
 
 
+def test_compaction_matches_image_fields_by_name(spark, system, tmp_path):
+    # the replica declares its columns in another order than the capture
+    # schema: a compacting commit unions the stored deltas with the batch
+    # and must line up their row images by field name, not position
+    schema = T.StructType([TEST_SCHEMA[c] for c in ("value", "id", "name")])
+    target = SnapshotTable(spark, str(tmp_path / "replica"), schema)
+    cap, live, calls, rep = system.capture, {}, [], CDCReplicator(system, target)
+    for call in [
+        ("INSERT", [(1, "u1", 1)]),
+        ("INSERT", [(k, f"u{k}", k) for k in range(2, 40)]),
+        ("UPDATE", [(1, "u1b", 10), (5, "u5b", 50)]),
+    ]:
+        _capture(spark, cap, *call, live)
+        calls.append(call)
+        rep.replicate_changes()
+    assert target._chain().deltas == ()  # the last round compacted
+    got = {r["id"]: (r["id"], r["name"], r["value"]) for r in target.read().collect()}
+    assert got == _oracle(calls)
+
+
 # -- storage format ------------------------------------------------------------
 
 

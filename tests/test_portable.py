@@ -65,18 +65,13 @@ def test_f64_sql_non_finite_literals(spark):
 
 
 def test_spread_repartitions_a_derived_frame_of_unknown_size(spark):
-    # an RDD-backed leaf has no size statistic: Spark reports it as
-    # spark.sql.defaultSizeInBytes (Long.MaxValue), which must read as
-    # unknown ('small', so repartition), not as a frame too big to need it
-    from cdc_system_spark.functions.portable import _estimated_bytes
-
+    # an RDD-backed leaf has no size statistic (Spark reports it as
+    # spark.sql.defaultSizeInBytes); a derived frame over it, like one of
+    # known size, is still repartitioned to the target
     rdd = spark.sparkContext.parallelize([(i % 3, i) for i in range(30)], 1)
     derived = spark.createDataFrame(rdd, "k long, v long").groupBy("k").count()
-    assert _estimated_bytes(derived) == 0
     out = spread(derived, min_partitions=4)
-    assert out is not derived
     assert out.rdd.getNumPartitions() == 4
     assert sorted(tuple(r) for r in out.collect()) == [(0, 10), (1, 10), (2, 10)]
-    # a frame of known size reads as its estimate
     known = spark.range(1000).groupBy((F.col("id") % 3).alias("k")).count()
-    assert 0 < _estimated_bytes(known) < 1 << 20
+    assert spread(known, min_partitions=4).rdd.getNumPartitions() == 4
