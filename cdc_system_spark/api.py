@@ -21,7 +21,13 @@ from pyspark.sql import types as T
 
 from cdc_system_spark import monitor as _monitor
 from cdc_system_spark.config import CDCConfig
-from cdc_system_spark.model import AUDIT_SCHEMA, SchemaRegistry, cdc_writer
+from cdc_system_spark.model import (
+    AUDIT_SCHEMA,
+    SchemaRegistry,
+    append_line,
+    cdc_writer,
+    complete_lines,
+)
 from cdc_system_spark.operators.capture import LogCapture
 from cdc_system_spark.operators.changelog import mark_synced, pending_changes, synced_view
 from cdc_system_spark.operators.merge import apply_changes, fold_changes
@@ -96,10 +102,15 @@ class SnapshotTable:
     file, then ``os.replace``), so readers see the old chain or the new
     one. A crash before the flip leaves a directory that no chain names;
     it is never read, and a re-run commits a new one (nothing deletes
-    superseded directories yet). ``_VERSIONS`` is appended after the
-    flip. A batch committed twice — a crash after the flip, before the
-    caller records its progress — is harmless: the fold replays each of
-    its changes twice in a row, which has the effect of once.
+    superseded directories yet). ``_VERSIONS`` gets the chain's line
+    after the flip, through ``model.append_line``, the commit protocol
+    of every metadata log: a crash in the middle of that append leaves a
+    torn last line, which time travel ignores and the next commit cuts
+    off; a crash between the flip and the append leaves that version out
+    of time travel, and the live table reads as committed. A batch
+    committed twice — a crash after the flip, before the caller records
+    its progress — is harmless: the fold replays each of its changes
+    twice in a row, which has the effect of once.
 
     One writer at a time.
     """
@@ -223,16 +234,14 @@ class SnapshotTable:
         os.replace(tmp, self._current_file())
         # commit-ordered version log — what makes time travel and the
         # change feed (changes_between) possible on plain parquet
-        with open(os.path.join(self.path, "_VERSIONS"), "a") as f:
-            f.write(chain.line() + "\n")
+        append_line(self._versions_file(), chain.line())
+
+    def _versions_file(self) -> str:
+        return os.path.join(self.path, "_VERSIONS")
 
     def _history(self) -> list[_Chain]:
         """Every committed chain, in commit order (oldest first)."""
-        vfile = os.path.join(self.path, "_VERSIONS")
-        if not os.path.exists(vfile):
-            return []
-        with open(vfile) as f:
-            return [_Chain.parse(ln) for ln in f if ln.strip()]
+        return [_Chain.parse(line) for line in complete_lines(self._versions_file())]
 
     def list_versions(self) -> list[str]:
         """Version names in commit order (oldest first)."""
@@ -366,6 +375,12 @@ def _replicate_round(
     after the sink version has landed, so a crash in between re-delivers
     the batch into an idempotent merge instead of losing changes. No
     file of the log is touched.
+
+    The ledger is one position per log, not one per consumer: every
+    replicator polls above the last watermark that any replicator of
+    the log committed. So a log has one consumer. A second replicator
+    with another sink, run after the first, sees none of the changes
+    the first one drained.
     """
     batch = batch.cache()
     try:

@@ -17,7 +17,9 @@ SURVEY.md §1.3).
 
 from __future__ import annotations
 
+import os
 from enum import Enum
+from typing import BinaryIO
 
 from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import types as T
@@ -66,6 +68,52 @@ CDC_PARQUET_OPTIONS = {"compression": "zstd"}
 def cdc_writer(df: DataFrame) -> DataFrameWriter:
     """``df.write`` in the CDC storage format (:data:`CDC_PARQUET_OPTIONS`)."""
     return df.write.options(**CDC_PARQUET_OPTIONS)
+
+
+# One commit protocol for every metadata log of the sync loop: the
+# capture manifest, the watermark ledger and a replica's version log are
+# append-only files of lines, and a line is committed once its newline
+# is on disk. A crash in the middle of an append leaves a last line with
+# no newline; readers skip it and the next append cuts it off, so a torn
+# line never becomes part of a commit and no log is ever rewritten.
+
+
+def append_line(path: str, line: str) -> None:
+    """Commit ``line`` (no newline) to the metadata log at ``path``: cut
+    a torn last line, append, flush and fsync. Creates the file."""
+    fd = os.open(path, os.O_RDWR | os.O_CREAT, 0o644)
+    with os.fdopen(fd, "r+b") as f:
+        end = _complete_end(f)
+        f.truncate(end)
+        f.seek(end)
+        f.write(line.encode() + b"\n")
+        f.flush()
+        os.fsync(f.fileno())
+
+
+def complete_lines(path: str) -> list[str]:
+    """The committed lines of the metadata log at ``path``, oldest first,
+    without their newlines: a torn last line is not one. A missing file
+    has none."""
+    try:
+        with open(path, "rb") as f:
+            data = f.read()
+    except FileNotFoundError:
+        return []
+    return [line.decode() for line in data.split(b"\n")[:-1]]
+
+
+def _complete_end(f: BinaryIO) -> int:
+    """Offset just past the last newline of ``f`` (0 if it has none)."""
+    pos = f.seek(0, os.SEEK_END)
+    while pos > 0:
+        step = min(pos, 4096)
+        pos -= step
+        f.seek(pos)
+        i = f.read(step).rfind(b"\n")
+        if i >= 0:
+            return pos + i + 1
+    return 0
 
 
 class SchemaRegistry:

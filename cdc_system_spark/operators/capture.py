@@ -24,12 +24,12 @@ import time
 from collections.abc import Collection
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
-from typing import BinaryIO, NamedTuple
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_system_spark.model import AUDIT_SCHEMA, ChangeOp, cdc_writer
+from cdc_system_spark.model import AUDIT_SCHEMA, ChangeOp, append_line, cdc_writer, complete_lines
 
 
 #: ``cdc_id = base + key``: keys must lie in ``[0, KEY_SPAN)`` so that
@@ -151,10 +151,13 @@ class LogCapture:
     earlier versions wrote) reads as one. Sync progress is not kept in
     the rows: the replicators drain in ``cdc_id`` order, so the synced
     changes are always a prefix of the log, and each replication round
-    commits that prefix as one watermark — a ``(wm, sync_time)`` entry
-    of the ledger at ``{log}_ledger`` (:meth:`commit_watermark`), written
-    after the replica version lands. The ``synced``/``sync_timestamp``
-    columns on disk keep their as-captured values (False / NULL);
+    commits that prefix as one watermark — a ``(wm, sync_time)`` line
+    appended to the ledger at ``{log}_ledger`` (:meth:`commit_watermark`)
+    after the replica version lands; no earlier entry is rewritten. The
+    ledger has one position per log, not one per consumer: a replicator
+    polls above whatever watermark any replicator of the log committed.
+    The ``synced``/``sync_timestamp`` columns on disk keep their
+    as-captured values (False / NULL);
     ``CDCSystem.read_log`` derives them from the ledger
     (``changelog.mark_synced``), and the pending poll becomes the
     ``cdc_id > wm`` range that the parquet scan pushes down.
@@ -180,15 +183,17 @@ class LogCapture:
     :class:`CaptureEntry` values (:meth:`manifest`) or the entries split
     by a watermark (:meth:`facts`).
 
-    Crash and error semantics. The line is written after the data
-    files, then flushed and fsynced. A Spark write that raises adds no
+    Crash and error semantics. Both the manifest and the ledger commit
+    through ``model.append_line``, the one protocol of every metadata
+    log: a line counts once its newline is on disk. The manifest line is
+    written after the data files. A Spark write that raises adds no
     rows and commits no line. Once the write returns, its rows are in
     the log, so a failure to record them (a footer read, the manifest
     commit) is logged, not raised: a caller that retried the call would
     capture the same changes twice. Such a failure, or a crash between
     the data write and the line or in the middle of the line, leaves
     files that no line names: readers ignore a trailing fragment with
-    no newline, the next capture truncates it before it appends, and
+    no newline, the next commit cuts it off before it appends, and
     :meth:`facts` hands those files to the monitor to read.
     The manifest adds facts about files; it does not decide which
     files the log holds. The directory listing does, so the poll, the
@@ -301,12 +306,7 @@ class LogCapture:
         """The committed capture facts, oldest first (see the class
         docstring). A trailing fragment with no newline is a commit torn
         by a crash, and is not part of the manifest."""
-        try:
-            with open(self.manifest_path, "rb") as f:
-                data = f.read()
-        except FileNotFoundError:
-            return []
-        return [CaptureEntry(**json.loads(line)) for line in data.split(b"\n")[:-1]]
+        return [CaptureEntry(**json.loads(line)) for line in complete_lines(self.manifest_path)]
 
     def facts(self, wm: int) -> LogFacts:
         """The manifest's entries split by the sync watermark ``wm``,
@@ -341,15 +341,7 @@ class LogCapture:
         return out
 
     def _commit_entry(self, entry: CaptureEntry) -> None:
-        line = (json.dumps(entry._asdict(), separators=(",", ":")) + "\n").encode()
-        fd = os.open(self.manifest_path, os.O_RDWR | os.O_CREAT, 0o644)
-        with os.fdopen(fd, "r+b") as f:
-            end = _complete_end(f)
-            f.truncate(end)  # a torn last line never becomes part of a commit
-            f.seek(end)
-            f.write(line)
-            f.flush()
-            os.fsync(f.fileno())
+        append_line(self.manifest_path, json.dumps(entry._asdict(), separators=(",", ":")))
 
     def read_files(self, names: Collection[str]) -> DataFrame:
         """The rows of the data files ``names`` (a non-empty subset of
@@ -372,13 +364,8 @@ class LogCapture:
     def ledger(self) -> list[tuple[int, datetime]]:
         """The committed ``(wm, sync_time)`` entries, oldest first;
         ``wm`` strictly increases. Read on the driver, no Spark job."""
-        try:
-            with open(self.ledger_path) as f:
-                lines = f.read().splitlines()
-        except FileNotFoundError:
-            return []
         out = []
-        for line in lines:
+        for line in complete_lines(self.ledger_path):
             wm, ts = line.split("\t")
             out.append((int(wm), datetime.fromisoformat(ts)))
         return out
@@ -386,21 +373,18 @@ class LogCapture:
     def commit_watermark(self, wm: int) -> None:
         """Mark every change with ``cdc_id <= wm`` synced, as of now.
 
-        The ledger is rewritten to a temporary file, flushed to disk and
-        swapped in with ``os.replace``, so a reader sees the old ledger
-        or the new one, never a torn one. A watermark at or below the
-        committed one changes nothing: the watermark never moves back."""
+        The entry is one line appended to the ledger through
+        ``model.append_line``: a torn last line, left by a crash in the
+        middle of an earlier commit, is cut off first, and the line is
+        fsynced. Readers ignore a torn line, so they see the ledger with
+        or without the new entry, never a corrupt one. A watermark at or
+        below the committed one changes nothing: the watermark never
+        moves back."""
         entries = self.ledger()
         if entries and wm <= entries[-1][0]:
             return
-        entries.append((int(wm), datetime.now(timezone.utc)))
         os.makedirs(os.path.dirname(self.ledger_path), exist_ok=True)
-        tmp = self.ledger_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.writelines(f"{w}\t{t.isoformat()}\n" for w, t in entries)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.ledger_path)
+        append_line(self.ledger_path, f"{int(wm)}\t{datetime.now(timezone.utc).isoformat()}")
 
     def refresh_zone_state(self) -> tuple[DataFrame, int, int, int] | None:
         """Build the ``(synced, cdc_id)`` zone state of the whole log on
@@ -439,19 +423,6 @@ def _footer_facts(file: str) -> tuple[int, int | None, int | None]:
     if not stats:
         return 0, None, None
     return meta.num_rows, min(st.min for st in stats), max(st.max for st in stats)
-
-
-def _complete_end(f: BinaryIO) -> int:
-    """Offset just past the last newline of ``f`` (0 if it has none)."""
-    pos = f.seek(0, os.SEEK_END)
-    while pos > 0:
-        step = min(pos, 4096)
-        pos -= step
-        f.seek(pos)
-        i = f.read(step).rfind(b"\n")
-        if i >= 0:
-            return pos + i + 1
-    return 0
 
 
 def timestamp_capture(

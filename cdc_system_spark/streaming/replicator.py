@@ -69,7 +69,14 @@ def decode_with_dead_letter(
 
 
 class StreamingReplicator:
-    """Continuous (or catch-up) replication of a parquet change log."""
+    """Continuous (or catch-up) replication of a parquet change log.
+
+    Each micro-batch ends in a watermark commit to the log's one ledger,
+    the position that ``CDCReplicator`` and ``SCD2Replicator`` poll
+    above (see ``api._replicate_round``): a batch replicator run on the
+    same log after this one skips what this one applied, whatever its
+    sink.
+    """
 
     def __init__(
         self,
@@ -80,7 +87,6 @@ class StreamingReplicator:
         key: str = "id",
         checkpoint_path: str | None = None,
         dead_letter_path: str | None = None,
-        max_files_per_trigger: int | None = None,
         config: CDCConfig | None = None,
         on_report: Callable[[dict], None] | None = None,
         clock: Callable[[], float] = time.monotonic,
@@ -94,7 +100,6 @@ class StreamingReplicator:
         self.key = key
         self.checkpoint_path = checkpoint_path or log_path + "_checkpoint"
         self.dead_letter_path = dead_letter_path
-        self.max_files_per_trigger = max_files_per_trigger
         self.config = config or CDCConfig()
         self.on_report = on_report
         self._clock = clock
@@ -144,9 +149,7 @@ class StreamingReplicator:
         )
 
     def _writer(self):
-        stream = read_change_stream(
-            self.spark, self.log_path, self.max_files_per_trigger
-        )
+        stream = read_change_stream(self.spark, self.log_path)
         return stream.writeStream.foreachBatch(self._apply_batch).option(
             "checkpointLocation", self.checkpoint_path
         )
@@ -157,9 +160,12 @@ class StreamingReplicator:
         q = self._writer().trigger(availableNow=True).start()
         q.awaitTermination()
 
-    def start_continuous(self, interval: str = "5 seconds"):
+    def start_continuous(self, interval: str | None = None):
         """Continuous micro-batch sync (≅ the 5 s poll loop,
-        example_usage.py:191-218). Returns the StreamingQuery."""
+        example_usage.py:191-218), every ``interval`` (default
+        ``config.sync_interval_seconds``, the reference's
+        ``CDC_SYNC_INTERVAL``). Returns the StreamingQuery."""
+        interval = interval or f"{self.config.sync_interval_seconds} seconds"
         return self._writer().trigger(processingTime=interval).start()
 
     def progress(self) -> dict:

@@ -895,6 +895,34 @@ def test_torn_manifest_line_is_ignored_and_truncated_by_the_next_capture(spark, 
     assert answers[0] == {"INSERT": {"total": 2, "pending": 2, "synced": 0}}
 
 
+def test_torn_ledger_line_is_ignored_and_truncated_by_the_next_watermark(
+    spark, system, tmp_path
+):
+    cap = system.capture
+    cap.capture_insert(_rows(spark, [(1, "a", 1), (2, "b", 2)]))
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+    assert rep.replicate_changes() == 2
+    cap.capture_insert(_rows(spark, [(3, "c", 3)]))
+    # a crash in the middle of the next watermark commit
+    ((wm, _),) = cap.ledger()
+    with open(cap.ledger_path, "a") as f:
+        f.write(f"{wm + 10**12}\t2026-")
+    assert [w for w, _ in cap.ledger()] == [wm]
+    assert [r["record_id"] for r in system.get_pending_changes().collect()] == [3]
+    answers = _monitor_answers(system)
+    assert answers == _scanned_answers(system)
+    assert (answers[1]["pending_changes"], answers[1]["synced_changes"]) == (1, 2)
+
+    assert rep.replicate_changes() == 1
+    with open(cap.ledger_path, "rb") as f:
+        data = f.read()
+    assert data.endswith(b"\n") and data.count(b"\n") == 2
+    assert len(cap.ledger()) == 2 and cap.ledger()[0][0] == wm
+    assert system.get_pending_changes().count() == 0
+    assert _replica(target) == {i: (i, n, i) for i, n in [(1, "a"), (2, "b"), (3, "c")]}
+
+
 def test_manifest_answers_invariant_under_random_op_sequences(spark, system, tmp_path):
     # property: after any interleaving of captures and partial
     # replications, the manifest-based statistics, health and lag equal
@@ -1024,6 +1052,39 @@ def test_deltas_from_before_and_after_an_evolution_read_in_the_evolved_schema(
     before = {r["id"]: tuple(r) for r in pre_df.collect()}
     assert before[1] == (1, "u1b", 10, None) and before[3] == (3, "u3", 3, None)
     assert 401 not in before and len(before) == 301
+
+
+def test_torn_version_line_is_ignored_and_truncated_by_the_next_commit(
+    spark, system, tmp_path
+):
+    # a crash in the middle of a _VERSIONS append leaves a torn last line:
+    # time travel lists every committed version once, each one reads, and
+    # the next commit cuts the fragment away
+    cap, live = system.capture, {}
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+    calls = [
+        ("INSERT", [(i, f"u{i}", i) for i in range(1, 301)]),
+        ("UPDATE", [(1, "u1b", 10)]),
+        ("DELETE", [(2, "u2", 2)]),
+    ]
+    versions = []
+    for n, call in enumerate(calls, 1):
+        _capture(spark, cap, *call, live)
+        rep.replicate_changes(batch_size=1000)
+        versions.append(_oracle(calls[:n]))
+        if n == 2:
+            base, delta = target.list_versions()
+            with open(os.path.join(target.path, "_VERSIONS"), "a") as f:
+                f.write(f"{base}\tid\t{delta}\td")
+    names = target.list_versions()
+    assert len(names) == len(set(names)) == 3
+    assert names[-1] == target._chain().name
+    for name, want in zip(names, versions):
+        assert {r["id"]: tuple(r) for r in target.read_version(name).collect()} == want, name
+    with open(os.path.join(target.path, "_VERSIONS"), "rb") as f:
+        data = f.read()
+    assert data.endswith(b"\n") and data.count(b"\n") == 3
 
 
 def test_crash_before_the_delta_commit_leaves_an_orphan_that_reads_ignore(spark, tmp_path):

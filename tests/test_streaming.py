@@ -237,6 +237,39 @@ def test_metrics_interval_gates_report_emission(spark, system, tmp_path):
     assert reports[1]["metrics_interval_seconds"] == 60
 
 
+def test_continuous_sync_interval_comes_from_config(spark, system, tmp_path, monkeypatch):
+    # CDC_SYNC_INTERVAL (reference config.py:34) is the default trigger
+    # interval of the continuous sync; an explicit interval overrides it.
+    # The patched trigger records its argument and stops before start()
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from cdc_system_spark.config import CDCConfig
+
+    class Stop(Exception):
+        pass
+
+    triggers = []
+
+    def trigger(self, **kwargs):
+        triggers.append(kwargs)
+        raise Stop
+
+    monkeypatch.setattr(DataStreamWriter, "trigger", trigger)
+    system.capture.capture_insert(_rows(spark, [(1, "a", 1)]))
+    rep = StreamingReplicator(
+        spark,
+        system.capture.path,
+        SnapshotTable(spark, str(tmp_path / "t"), ROW_SCHEMA),
+        ROW_SCHEMA,
+        checkpoint_path=str(tmp_path / "ckpt"),
+        config=CDCConfig(sync_interval_seconds=2),
+    )
+    for interval in (None, "30 seconds"):
+        with pytest.raises(Stop):
+            rep.start_continuous(interval)
+    assert triggers == [{"processingTime": "2 seconds"}, {"processingTime": "30 seconds"}]
+
+
 def test_checkpoint_idempotent_restart(spark, system, tmp_path):
     system.capture.capture_insert(_rows(spark, [(1, "a", 1), (2, "b", 2)]))
     target = SnapshotTable(spark, str(tmp_path / "t"), ROW_SCHEMA)
