@@ -76,20 +76,21 @@ class SnapshotTable:
     edition.
 
     Storage format. Snapshots and deltas are written in the CDC parquet
-    format (``model.CDC_PARQUET_OPTIONS``, zstd), which stores a replica
-    in fewer bytes than Spark's default snappy; a chain may mix files of
-    either codec, and reads need no setting.
+    format (``model.CDC_PARQUET_OPTIONS``: zstd, v2 pages), which stores
+    a replica in fewer bytes than Spark's default snappy and v1 pages; a
+    chain may mix files of either format, and reads need no setting.
 
     Compaction, one rule and no setting: before a :meth:`merge_changes`
-    commit, if the deltas on the base already hold at least as many bytes
-    as the base, the commit writes a full snapshot instead — one fold of
-    the base with those deltas and the batch, a single net-effect
-    aggregation and join — and starts a new chain. The rule compares the
-    compressed bytes on disk, so how often it fires follows how well
-    deltas compress next to the base. Each commit still makes exactly
-    one version. So a commit writes the batch, plus one replica rewrite
-    per base's worth of deltas, and a read never scans more than about
-    twice the base's bytes.
+    commit, if the deltas on the base already hold at least as many
+    change rows as the base holds rows, the commit writes a full
+    snapshot instead — one fold of the base with those deltas and the
+    batch, a single net-effect aggregation and join — and starts a new
+    chain. Both counts come from the parquet footers, so the rule starts
+    no Spark job and does not depend on the codec, the page version or
+    the footer size: the same commits compact in any storage format.
+    Each commit still makes exactly one version. So a commit writes the
+    batch, plus one replica rewrite per base's worth of changes, and a
+    read folds no more than one base's worth of changes and a batch.
 
     Reads. :meth:`read` and :meth:`read_version` return
     ``fold_changes(base, union(deltas))`` (operators/merge.py): the
@@ -163,13 +164,16 @@ class SnapshotTable:
     def _dir(self, version: str) -> str:
         return os.path.join(self.path, version)
 
-    def _bytes(self, versions: Iterable[str]) -> int:
-        """Bytes of the data files of ``versions``."""
+    def _rows(self, versions: Iterable[str]) -> int:
+        """Rows of the data files of ``versions``, from their parquet
+        footers: driver-side, no Spark job."""
+        import pyarrow.parquet as pq
+
         total = 0
         for v in versions:
             with os.scandir(self._dir(v)) as entries:
                 total += sum(
-                    e.stat().st_size
+                    pq.read_metadata(e.path).num_rows
                     for e in entries
                     if e.is_file() and not e.name.startswith(("_", "."))
                 )
@@ -209,7 +213,7 @@ class SnapshotTable:
         chain = self._chain() if self.exists() else None
         if chain is not None and chain.deltas and chain.key != key:
             raise ValueError(f"{self.path} merges on {chain.key!r}, not {key!r}")
-        if chain is None or self._bytes(chain.deltas) >= self._bytes([chain.base]):
+        if chain is None or self._rows(chain.deltas) >= self._rows([chain.base]):
             # one merge of the base with its deltas and the batch
             base, deltas = self._parts(chain) if chain is not None else (self.read(), None)
             batch = changes.select(*_DELTA_COLUMNS)

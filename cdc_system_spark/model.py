@@ -55,14 +55,20 @@ AUDIT_COLUMNS = [f.name for f in AUDIT_SCHEMA.fields]
 #: letters and compacted logs. The log keeps full JSON row images and is
 #: never deleted, so its bytes are paid on every scan of it; zstd stores
 #: that text in about 40% fewer bytes than Spark's default snappy. Data
-#: pages stay v1: v2 pages shrink a replica snapshot further, but not a
-#: small delta, whose size is mostly its footer, and that would skew the
-#: byte-based compaction rule of ``api.SnapshotTable``. The codec is
-#: recorded per file, so readers need no setting, and files written
-#: with other options (Spark's defaults, as earlier versions wrote)
-#: read in the same scan. Set per write, never on the session: the
-#: caller's session and its other writes keep their own settings.
-CDC_PARQUET_OPTIONS = {"compression": "zstd"}
+#: pages are v2, whose encodings suit change data: sorted ids such as
+#: ``cdc_id``, ``record_id`` and a replica's key are stored
+#: DELTA_BINARY_PACKED, in a few bits per row, and strings such as the
+#: JSON images DELTA_BYTE_ARRAY, which shares each value's prefix with
+#: the one before it. The compaction rule of ``api.SnapshotTable`` must
+#: keep counting rows, not file bytes: v2 pages shrink a snapshot far
+#: more than a small delta, whose size is mostly its footer, and under a
+#: byte rule the format would decide when a replica compacts. The codec
+#: and the encodings are recorded per file, so readers need no setting,
+#: and files written with other options (Spark's defaults, as earlier
+#: versions wrote) read in the same scan. Set per write, never on the
+#: session: the caller's session and its other writes keep their own
+#: settings.
+CDC_PARQUET_OPTIONS = {"compression": "zstd", "parquet.writer.version": "v2"}
 
 
 def cdc_writer(df: DataFrame) -> DataFrameWriter:

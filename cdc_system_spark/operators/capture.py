@@ -143,12 +143,14 @@ class LogCapture:
 
     Each capture call is one plain parquet append; no file of the log
     is ever rewritten, renamed or deleted. The files are written in the
-    CDC parquet format (``model.CDC_PARQUET_OPTIONS``, zstd): the log
-    keeps full JSON row images for ever and every poll, audit and drain
-    scans them again, and zstd stores that text in about 40% fewer
-    bytes than Spark's default snappy. The codec is recorded per file,
-    so a log that also holds files of Spark's default format (as
-    earlier versions wrote) reads as one. Sync progress is not kept in
+    CDC parquet format (``model.CDC_PARQUET_OPTIONS``, zstd with v2
+    pages): the log keeps full JSON row images for ever and every poll,
+    audit and drain scans them again. zstd stores that text in about
+    40% fewer bytes than Spark's default snappy, v2 pages store the
+    sorted ``cdc_id`` and ``record_id`` delta-encoded and share prefixes
+    between neighbouring images. The format is recorded per file, so a
+    log that also holds files of Spark's default format (as earlier
+    versions wrote) reads as one. Sync progress is not kept in
     the rows: the replicators drain in ``cdc_id`` order, so the synced
     changes are always a prefix of the log, and each replication round
     commits that prefix as one watermark — a ``(wm, sync_time)`` line

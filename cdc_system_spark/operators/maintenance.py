@@ -20,10 +20,11 @@ sorted by ``cdc_id`` within partitions:
   ``cdc_id`` range predicates skip row groups.
 
 The compacted log is written in the CDC parquet format that capture
-writes (``model.CDC_PARQUET_OPTIONS``, zstd): a change log is kept for
-ever and scanned again and again, so its JSON row images are stored in
-about 40% fewer bytes than under Spark's default snappy. The input may
-hold files of any codec; the codec is recorded per file.
+writes (``model.CDC_PARQUET_OPTIONS``, zstd with v2 pages): a change log
+is kept for ever and scanned again and again, so its JSON row images are
+stored in fewer bytes than under Spark's default snappy and v1 pages,
+and its sorted ids delta-encoded. The input may hold files of any
+format; the format is recorded per file.
 
 Compaction writes to a NEW root and swaps atomically-enough for an
 append-only log: writers keep appending to the active root; readers of

@@ -1274,3 +1274,90 @@ def test_a_log_and_replica_of_mixed_formats_read_as_one_format(spark, tmp_path, 
     single = _format_run(spark, str(tmp_path / "single"), monkeypatch, old_first=False)
     assert mixed == single
     assert mixed[1]["pending_changes"] == len(mixed[3]) == 3
+
+
+def _compaction_run(spark, root, monkeypatch, options):
+    """Replication rounds on a 300-row base written with the CDC parquet
+    ``options``: three small batches, then one as large as the base and
+    one more small one. Returns the kinds of the committed versions
+    (``v`` a snapshot, ``d`` a delta) and the replica."""
+    from cdc_system_spark import model
+
+    system = CDCSystem(spark, root, "rounds")
+    cap, live, calls = system.setup_cdc(TEST_SCHEMA, key="id"), {}, []
+    target = SnapshotTable(spark, os.path.join(root, "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+    rounds = [
+        [("INSERT", [(k, f"u{k}", k) for k in range(1, 301)])],
+        [("UPDATE", [(1, "u1b", 10), (2, "u2b", 20)])],
+        [("INSERT", [(301, "u301", 301)]), ("DELETE", [(3, "u3", 3)])],
+        [("UPDATE", [(4, "u4b", 40)])],
+        [("UPDATE", [(k, f"u{k}c", -k) for k in range(5, 305)])],
+        [("DELETE", [(6, "u6c", -6), (7, "u7c", -7)])],
+    ]
+    with monkeypatch.context() as m:
+        m.setattr(model, "CDC_PARQUET_OPTIONS", options)
+        for r, round_calls in enumerate(rounds):
+            for call in round_calls:
+                _capture(spark, cap, *call, live)
+                calls.append(call)
+            rep.replicate_changes(batch_size=1000)
+            assert _replica(target) == _oracle(calls), f"round {r}"
+    return [name[0] for name in target.list_versions()], _replica(target)
+
+
+def test_compaction_commits_the_same_versions_in_any_storage_format(
+    spark, tmp_path, monkeypatch
+):
+    # the compaction rule counts rows: the same rounds compact at the
+    # same commits whether the replica is written with v1 or v2 pages,
+    # whose small deltas are mostly footer bytes
+    v1 = _compaction_run(spark, str(tmp_path / "v1"), monkeypatch, {"compression": "zstd"})
+    v2 = _compaction_run(
+        spark, str(tmp_path / "v2"), monkeypatch, {"compression": "zstd", "parquet.writer.version": "v2"}
+    )
+    assert v1 == v2
+    # the deltas reach the base's 300 rows only with the large batch
+    assert v1[0] == ["v", "d", "d", "d", "d", "v"]
+
+
+def _encodings(path, column):
+    """The parquet encodings of ``column`` (a dotted path) in the data
+    files of the directory ``path``, or in the file ``path``."""
+    import pyarrow.parquet as pq
+
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(path, n) for n in os.listdir(path) if n.endswith(".parquet")
+    ]
+    out = set()
+    for f in files:
+        meta = pq.read_metadata(f)
+        for g in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                chunk = meta.row_group(g).column(c)
+                if chunk.path_in_schema == column:
+                    out |= set(chunk.encodings)
+    return out
+
+
+def test_cdc_storage_delta_encodes_sorted_ids(spark, system, tmp_path):
+    # v2 data pages: the log's cdc_id and record_id, a delta's ids and a
+    # snapshot's key are stored DELTA_BINARY_PACKED, not PLAIN int64
+    cap = system.capture
+    target = SnapshotTable(spark, str(tmp_path / "replica"), TEST_SCHEMA)
+    rep = CDCReplicator(system, target)
+    cap.capture_insert(_rows(spark, [(k, f"u{k}", k) for k in range(1, 51)]))
+    rep.replicate_changes()
+    cap.capture_update(_rows(spark, [(1, "u1b", 10), (2, "u2b", 20)]), target.read().filter("id <= 2"))
+    rep.replicate_changes()
+    chain = target._chain()
+    (delta,) = chain.deltas
+    (entry, _) = cap.manifest()
+    logged = [os.path.join(cap.path, n) for n in entry.files]
+    for path, column in [
+        *[(f, c) for f in logged for c in ("cdc_id", "record_id")],
+        (os.path.join(target.path, delta), "cdc_id"),
+        (os.path.join(target.path, delta), "record_id"),
+        (os.path.join(target.path, chain.base), "id"),
+    ]:
+        assert "DELTA_BINARY_PACKED" in _encodings(path, column), (path, column)
