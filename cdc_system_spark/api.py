@@ -27,6 +27,7 @@ from cdc_system_spark.model import (
     append_line,
     cdc_writer,
     complete_lines,
+    empty_frame,
 )
 from cdc_system_spark.operators.capture import LogCapture
 from cdc_system_spark.operators.changelog import mark_synced, pending_changes, synced_view
@@ -133,10 +134,10 @@ class SnapshotTable:
             return _Chain.parse(f.readline())
 
     def read(self) -> DataFrame:
-        """The live version, in the declared schema (an empty frame
-        before the first write)."""
+        """The live version, in the declared schema (before the first
+        write, an empty frame with no partition to scan)."""
         if not self.exists():
-            return self.spark.createDataFrame([], self.schema)
+            return empty_frame(self.spark, self.schema)
         return self._fold(self._chain())
 
     def _fold(self, chain: _Chain) -> DataFrame:
@@ -309,7 +310,11 @@ class CDCSystem:
         """
         self.registry.register(self.table_name, schema, key)
         self.capture = LogCapture(
-            self.spark, self.root, self.table_name, key=self.registry.key(self.table_name)
+            self.spark,
+            self.root,
+            self.table_name,
+            key=self.registry.key(self.table_name),
+            row_schema=schema,
         )
         return self.capture
 
@@ -318,13 +323,17 @@ class CDCSystem:
         reference would need on ALTER TABLE ADD COLUMN — it has no
         path for this; its triggers would silently drop the column).
 
-        Validation + registry swap only: the change log's JSON row
-        images decode under the evolved schema with nulls for the new
-        columns, so history needs no rewrite, and captures after the
-        evolution carry the new columns transparently. Pair with
-        ``SnapshotTable.evolve`` on the target side.
+        Validation, a registry swap, and the new schema passed on to the
+        capture: captures after the evolution store images with the new
+        columns, and readers read every image in the evolved schema. A
+        typed image stored before it lacks the new struct fields, which
+        the parquet reader fills with nulls, and a JSON image of an
+        earlier version decodes with nulls for them, so history needs no
+        rewrite. Pair with ``SnapshotTable.evolve`` on the target side.
         """
         self.registry.evolve(self.table_name, new_schema)
+        if self.capture is not None:
+            self.capture.row_schema = new_schema
 
     def read_log(self) -> DataFrame:
         """The change log with ``synced``/``sync_timestamp`` derived from
@@ -333,18 +342,11 @@ class CDCSystem:
         assert self.capture is not None, "setup_cdc first"
         return mark_synced(self.capture.read_log(), self.capture.ledger())
 
-    def read_pending(
-        self, limit: int | None = None, row_schema: T.StructType | None = None
-    ) -> DataFrame:
-        """The pending poll both replicators share (:func:`pending_changes`).
-        Pending rows have no sync time, so the log derives ``synced``
-        alone (:func:`synced_view`): one comparison at any ledger length."""
-        assert self.capture is not None, "setup_cdc first"
-        log = synced_view(self.capture.read_log(), self.capture.ledger())
-        return pending_changes(log, limit=limit, row_schema=row_schema)
-
     def get_pending_changes(self, limit: int | None = None) -> DataFrame:
-        """≅ cdc_system.py:199-231, decoded images included.
+        """≅ cdc_system.py:199-231: the pending poll the replicators
+        share (:func:`pending_changes`), with the typed images ``old`` /
+        ``new`` beside the reference's JSON columns. The images are
+        stored typed (see ``LogCapture``), so the poll decodes nothing.
 
         Pending means ``cdc_id`` above the last committed sync
         watermark. The derived ``synced`` filter simplifies to that
@@ -352,9 +354,13 @@ class CDCSystem:
         groups of the drained prefix are skipped by their footer
         statistics — what the reference's ``(synced, cdc_id)`` covering
         index buys its hot poll (cdc_system.py:209-216). With the
-        ``orderBy + limit`` top-k, a poll is one scan job.
+        ``orderBy + limit`` top-k, a poll is one scan job. Pending rows
+        have no sync time, so the log derives ``synced`` alone
+        (:func:`synced_view`): one comparison at any ledger length.
         """
-        return self.read_pending(limit, self.registry.schema(self.table_name))
+        assert self.capture is not None, "setup_cdc first"
+        log = synced_view(self.capture.read_log(), self.capture.ledger())
+        return pending_changes(log, limit=limit)
 
     def log_summary(self) -> _monitor.LogSummary:
         """Counts, bounds and sync position of the change log, from the
@@ -441,9 +447,10 @@ class CDCReplicator:
         def write(batch: DataFrame) -> None:
             self._with_retries(lambda: self.target.merge_changes(batch, self.key))
 
-        return _replicate_round(
-            self.source.capture, self.source.get_pending_changes(limit=batch_size), write
-        )
+        # only the columns the replica's delta stores: the round caches
+        # the batch, and a JSON column would be derived for every change
+        batch = self.source.get_pending_changes(limit=batch_size).select(*_DELTA_COLUMNS)
+        return _replicate_round(self.source.capture, batch, write)
 
 
 #: output schema of operators/scd.scd2_from_log / scd2_apply
@@ -485,7 +492,7 @@ class SCD2Replicator:
             self.history.write(scd2_apply(self.history.read(), batch))
 
         return _replicate_round(
-            self.source.capture, self.source.read_pending(batch_size), write
+            self.source.capture, self.source.get_pending_changes(batch_size), write
         )
 
 

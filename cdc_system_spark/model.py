@@ -8,11 +8,16 @@ table (reference: cdc_system.py:103, DDL at cdc_system.py:115-126):
     changed_at TIMESTAMP DEFAULT now, synced INTEGER 0/1,
     sync_timestamp TIMESTAMP
 
-Here the same log is a DataFrame with this exact schema; ``old_data`` /
-``new_data`` stay JSON strings at the ingest boundary and are decoded to
-typed structs with ``from_json`` against a caller-declared StructType
-(never schemaless maps — keeps Catalyst column pruning effective,
-SURVEY.md §1.3).
+Here the audit API keeps these columns, and every reader of the log
+also gets the row images as typed structs ``old`` / ``new`` in the
+table's declared StructType (never schemaless maps — keeps Catalyst
+column pruning effective, SURVEY.md §1.3). On disk the images are stored
+typed, as parquet struct columns, not as JSON text: capture pays no
+``to_json`` and the poll no ``from_json``, and parquet encodes each
+field by its type. ``old_data`` / ``new_data`` are derived from the
+typed images with ``to_json`` only when a reader asks for them
+(``operators/changelog.log_rows``), so the reference's JSON columns
+cost nothing on the replication path.
 """
 
 from __future__ import annotations
@@ -21,7 +26,7 @@ import os
 from enum import Enum
 from typing import BinaryIO
 
-from pyspark.sql import DataFrame, DataFrameWriter
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import types as T
 
 
@@ -35,6 +40,9 @@ class ChangeOp(str, Enum):
 
 #: Audit-log schema — mirrors the reference DDL (cdc_system.py:115-126).
 #: ``synced`` is Boolean-as-int there; a real boolean here (SURVEY §1.2).
+#: ``old_data`` / ``new_data`` are JSON text as in the reference: derived
+#: from the typed images by the log reader, and the stored layout of logs
+#: written before the images were typed (``changelog.stored_schema``).
 AUDIT_SCHEMA = T.StructType(
     [
         T.StructField("cdc_id", T.LongType(), False),
@@ -52,28 +60,38 @@ AUDIT_COLUMNS = [f.name for f in AUDIT_SCHEMA.fields]
 
 #: The parquet format of CDC storage: every file the package writes for
 #: the change log, replica snapshots and deltas, the SCD2 history, dead
-#: letters and compacted logs. The log keeps full JSON row images and is
+#: letters and compacted logs. The log keeps full row images and is
 #: never deleted, so its bytes are paid on every scan of it; zstd stores
-#: that text in about 40% fewer bytes than Spark's default snappy. Data
-#: pages are v2, whose encodings suit change data: sorted ids such as
-#: ``cdc_id``, ``record_id`` and a replica's key are stored
-#: DELTA_BINARY_PACKED, in a few bits per row, and strings such as the
-#: JSON images DELTA_BYTE_ARRAY, which shares each value's prefix with
-#: the one before it. The compaction rule of ``api.SnapshotTable`` must
-#: keep counting rows, not file bytes: v2 pages shrink a snapshot far
-#: more than a small delta, whose size is mostly its footer, and under a
-#: byte rule the format would decide when a replica compacts. The codec
-#: and the encodings are recorded per file, so readers need no setting,
-#: and files written with other options (Spark's defaults, as earlier
-#: versions wrote) read in the same scan. Set per write, never on the
-#: session: the caller's session and its other writes keep their own
-#: settings.
+#: them in far fewer bytes than Spark's default snappy. Data pages are
+#: v2, whose encodings suit change data: sorted ids such as ``cdc_id``,
+#: ``record_id`` and a replica's key are stored DELTA_BINARY_PACKED, in
+#: a few bits per row, and strings DELTA_BYTE_ARRAY, which shares each
+#: value's prefix with the one before it. The compaction rule of
+#: ``api.SnapshotTable`` must keep counting rows, not file bytes: v2
+#: pages shrink a snapshot far more than a small delta, whose size is
+#: mostly its footer, and under a byte rule the format would decide when
+#: a replica compacts. The codec and the encodings are recorded per
+#: file, so readers need no setting, and files written with other
+#: options (Spark's defaults, as earlier versions wrote) read in the same
+#: scan. Set per write, never on the session: the caller's session and
+#: its other writes keep their own settings.
 CDC_PARQUET_OPTIONS = {"compression": "zstd", "parquet.writer.version": "v2"}
 
 
 def cdc_writer(df: DataFrame) -> DataFrameWriter:
     """``df.write`` in the CDC storage format (:data:`CDC_PARQUET_OPTIONS`)."""
     return df.write.options(**CDC_PARQUET_OPTIONS)
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A frame of no rows in ``schema``, built in the JVM as an empty
+    local relation. It has no partition to scan and needs no Python
+    worker, and the optimizer prunes what it feeds. ``createDataFrame([],
+    schema)`` gives a Python-backed RDD scan instead, which a write that
+    reads it runs as Python tasks."""
+    jspark = spark._jsparkSession
+    jschema = jspark.parseDataType(schema.json())
+    return DataFrame(jspark.createDataFrame(spark._jvm.java.util.ArrayList(), jschema), spark)
 
 
 # One commit protocol for every metadata log of the sync loop: the
@@ -148,10 +166,11 @@ class SchemaRegistry:
         Delta/Iceberg ``mergeSchema`` allows new nullable columns,
         never drops or type changes — those need a rewrite).
 
-        Old change-log entries carry JSON row images, so they decode
-        under the evolved schema with nulls for the new columns; no log
-        rewrite, no backfill. Raises on drops or type changes, which
-        would silently corrupt history.
+        Old change-log entries read under the evolved schema with nulls
+        for the new columns: a typed image lacks the new struct fields,
+        which the parquet reader fills with nulls, and a JSON image
+        decodes without them; no log rewrite, no backfill. Raises on
+        drops or type changes, which would silently corrupt history.
         """
         old = self._schemas[table]
         new_fields = {f.name: f for f in new_schema.fields}

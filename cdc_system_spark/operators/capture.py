@@ -2,8 +2,11 @@
 
 The reference implements only trigger-based capture (SQL triggers append
 to the audit table, cdc_system.py:143-197). Spark has no triggers; the
-equivalents, each emitting the same AUDIT_SCHEMA DataFrame so the
-replicator is strategy-agnostic (SURVEY §2.1 DDL3, §7.1 M4):
+equivalents each emit change rows that the replicator reads the same
+way, so it is strategy-agnostic (SURVEY §2.1 DDL3, §7.1 M4). LogCapture
+and timestamp_capture give the row images typed (:func:`as_changes`),
+snapshot_diff gives them as JSON text in the audit schema, and
+``changelog.log_rows`` reads either:
 
 * **LogCapture** (≅ trigger-based): writers call ``capture_*`` at write
   time; changes append to a parquet change log inside the same job that
@@ -26,10 +29,12 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from cdc_system_spark.model import AUDIT_SCHEMA, ChangeOp, append_line, cdc_writer, complete_lines
+from cdc_system_spark.model import ChangeOp, append_line, cdc_writer, complete_lines, empty_frame
+from cdc_system_spark.operators.changelog import log_rows, stored_schema
 
 
 #: ``cdc_id = base + key``: keys must lie in ``[0, KEY_SPAN)`` so that
@@ -87,8 +92,18 @@ def as_changes(
     old_rows: DataFrame | None = None,
     base_cdc_id: int = 0,
     changed_at: datetime | None = None,
+    row_schema: T.StructType | None = None,
 ) -> DataFrame:
-    """Wrap full row images as audit-schema change rows.
+    """Wrap full row images as change rows in the log's stored layout.
+
+    The images are typed struct columns in ``row_schema`` (default: the
+    schema of ``rows``): each field is the row's column of that name,
+    cast to the declared type, or NULL if the row has no such column. A
+    change row holds only the images its operation has: ``new`` for an
+    INSERT, ``old`` for a DELETE, both for an UPDATE, whose ``old`` is
+    the row of ``old_rows`` with the same key (NULL if there is none).
+    ``operation``, ``record_id``, ``changed_at`` and the as-captured
+    ``synced`` / ``sync_timestamp`` are as in the audit schema.
 
     ``cdc_id`` = base + key (keys are unique within one capture call);
     for strict arrival ordering across calls, callers pass a
@@ -99,17 +114,22 @@ def as_changes(
     ``current_timestamp()``).
     """
     op = ChangeOp(operation).value
-    img = F.to_json(F.struct(*[F.col(c) for c in rows.columns]))
-    old_img = F.lit(None).cast("string")
+    schema = row_schema or rows.schema
+
+    def image(df: DataFrame) -> Column:
+        def field(f: T.StructField) -> Column:
+            value = F.col(f.name) if f.name in df.columns else F.lit(None)
+            return value.cast(f.dataType).alias(f.name)
+
+        return F.struct(*map(field, schema.fields))
+
+    images = {"old": None, "new": image(rows)}
     if old_rows is not None:
-        old = old_rows.select(
-            F.col(key).alias("_ok"),
-            F.to_json(F.struct(*[F.col(c) for c in old_rows.columns])).alias("_old_img"),
-        )
-        rows = rows.join(old, rows[key] == old["_ok"], "left").drop("_ok")
-        old_img = F.col("_old_img")
+        old = old_rows.select(F.col(key).alias("_ok"), image(old_rows).alias("_old"))
+        rows = rows.join(old, rows[key] == old["_ok"], "left")
+        images["old"] = F.col("_old")
     if op == ChangeOp.DELETE.value:
-        old_img, img = img, F.lit(None).cast("string")
+        images = {"old": images["new"], "new": None}
     k = F.col(key).cast("long")
     checked = F.when(k.between(0, KEY_SPAN - 1), k).otherwise(
         F.raise_error(
@@ -123,8 +143,7 @@ def as_changes(
         (F.lit(base_cdc_id) + checked).alias("cdc_id"),
         F.lit(op).alias("operation"),
         k.alias("record_id"),
-        old_img.alias("old_data"),
-        img.alias("new_data"),
+        *[img.alias(name) for name, img in images.items() if img is not None],
         (F.current_timestamp() if changed_at is None else F.lit(changed_at)).alias("changed_at"),
         F.lit(False).alias("synced"),
         F.lit(None).cast("timestamp").alias("sync_timestamp"),
@@ -142,24 +161,33 @@ class LogCapture:
     are per-batch files, read via streaming file source (streaming/).
 
     Each capture call is one plain parquet append; no file of the log
-    is ever rewritten, renamed or deleted. The files are written in the
-    CDC parquet format (``model.CDC_PARQUET_OPTIONS``, zstd with v2
-    pages): the log keeps full JSON row images for ever and every poll,
-    audit and drain scans them again. zstd stores that text in about
-    40% fewer bytes than Spark's default snappy, v2 pages store the
-    sorted ``cdc_id`` and ``record_id`` delta-encoded and share prefixes
-    between neighbouring images. The format is recorded per file, so a
-    log that also holds files of Spark's default format (as earlier
-    versions wrote) reads as one. Sync progress is not kept in
-    the rows: the replicators drain in ``cdc_id`` order, so the synced
-    changes are always a prefix of the log, and each replication round
-    commits that prefix as one watermark — a ``(wm, sync_time)`` line
-    appended to the ledger at ``{log}_ledger`` (:meth:`commit_watermark`)
-    after the replica version lands; no earlier entry is rewritten. The
-    ledger has one position per log, not one per consumer: a replicator
-    polls above whatever watermark any replicator of the log committed.
-    The ``synced``/``sync_timestamp`` columns on disk keep their
-    as-captured values (False / NULL);
+    is ever rewritten, renamed or deleted. The log keeps full row images
+    for ever and every poll, audit and drain scans them again, so they
+    are stored typed: ``old`` / ``new`` are parquet struct columns in the
+    table's registered schema (``row_schema``, from ``setup_cdc``; the
+    input's own schema if none is given), each input column cast to its
+    declared type (:func:`as_changes`). A file holds only the images its
+    operation has: an INSERT file has no ``old`` column, a DELETE file
+    no ``new`` one. Each field is encoded by its type, so a numeric
+    field costs a few bytes where its JSON text cost tens, and capture
+    pays no ``to_json``. Readers read every file through
+    ``changelog.log_rows``, which gives the typed images and derives the
+    reference's JSON ``old_data`` / ``new_data`` on demand; files of
+    earlier versions, which stored the images as JSON text, read in the
+    same scan. The files are written in the CDC parquet format
+    (``model.CDC_PARQUET_OPTIONS``, zstd with v2 pages, so the sorted
+    ``cdc_id`` and ``record_id`` are delta-encoded). The format is
+    recorded per file, so a log that also holds files of Spark's default
+    format (as earlier versions wrote) reads as one. Sync progress is
+    not kept in the rows: the replicators drain in ``cdc_id`` order, so
+    the synced changes are always a prefix of the log, and each
+    replication round commits that prefix as one watermark — a
+    ``(wm, sync_time)`` line appended to the ledger at ``{log}_ledger``
+    (:meth:`commit_watermark`) after the replica version lands; no
+    earlier entry is rewritten. The ledger has one position per log, not
+    one per consumer: a replicator polls above whatever watermark any
+    replicator of the log committed. The ``synced``/``sync_timestamp``
+    columns on disk keep their as-captured values (False / NULL);
     ``CDCSystem.read_log`` derives them from the ledger
     (``changelog.mark_synced``), and the pending poll becomes the
     ``cdc_id > wm`` range that the parquet scan pushes down.
@@ -209,10 +237,21 @@ class LogCapture:
     #: zone count of the on-demand (synced, cdc_id) zone state
     NUM_ZONES = 64
 
-    def __init__(self, spark: SparkSession, root: str, table: str, key: str = "id"):
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        table: str,
+        key: str = "id",
+        row_schema: T.StructType | None = None,
+    ):
         self.spark = spark
         self.table = table
         self.key = key
+        #: the tracked table's schema: the type of the stored images, and
+        #: of the images readers get (``changelog.log_rows``; readers get
+        #: none while it is None)
+        self.row_schema = row_schema
         self.path = os.path.join(root, f"{table}_cdc")
         #: epoch of the last allocated base; None until bootstrapped
         #: from the log on the first capture
@@ -263,7 +302,13 @@ class LogCapture:
         # current_timestamp() would be, so that it is known here
         now = datetime.now(timezone.utc)
         changes = as_changes(
-            rows, op, self.key, old_rows, base_cdc_id=self._next_base(), changed_at=now
+            rows,
+            op,
+            self.key,
+            old_rows,
+            base_cdc_id=self._next_base(),
+            changed_at=now,
+            row_schema=self.row_schema,
         )
         before = self.data_files()
         cdc_writer(changes).mode("append").parquet(self.path)
@@ -348,18 +393,27 @@ class LogCapture:
     def read_files(self, names: Collection[str]) -> DataFrame:
         """The rows of the data files ``names`` (a non-empty subset of
         :meth:`data_files`), as captured like :meth:`read_log`."""
-        paths = [os.path.join(self.path, n) for n in names]
-        return self.spark.read.schema(AUDIT_SCHEMA).parquet(*paths)
+        return self._read(*[os.path.join(self.path, n) for n in names])
 
     def read_log(self) -> DataFrame:
-        """The log as captured: the on-disk ``synced``/``sync_timestamp``
-        are not sync state (``CDCSystem.read_log`` derives those from
-        the ledger). A log that does not exist yet reads as empty; an
-        unreadable one raises when the frame is evaluated — it never
-        reads as an empty, fully-synced log."""
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], AUDIT_SCHEMA)
-        return self.spark.read.schema(AUDIT_SCHEMA).parquet(self.path)
+        """The log as captured, through ``changelog.log_rows`` (the
+        audit columns and the typed images in :attr:`row_schema`): the
+        on-disk ``synced``/``sync_timestamp`` are not sync state
+        (``CDCSystem.read_log`` derives those from the ledger). A log
+        that does not exist yet reads as empty, with no partition to
+        scan; an unreadable one raises when the frame is evaluated — it
+        never reads as an empty, fully-synced log."""
+        return self._read(self.path) if os.path.exists(self.path) else self._read()
+
+    def _read(self, *paths: str) -> DataFrame:
+        """The change rows of the files or directories ``paths``; with
+        none, an empty frame."""
+        schema = stored_schema(self.row_schema)
+        if paths:
+            stored = self.spark.read.schema(schema).parquet(*paths)
+        else:
+            stored = empty_frame(self.spark, schema)
+        return log_rows(stored, self.row_schema)
 
     # -- committed sync watermarks -------------------------------------------
 

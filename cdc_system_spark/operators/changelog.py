@@ -2,9 +2,14 @@
 
 Reference behaviors re-expressed (SURVEY.md §2.2/§2.4/§2.5):
 
+* ``log_rows`` reads the log's files for every reader (the audit
+  API, the pending poll, the monitor and the streaming source): the row
+  images typed as ``old`` / ``new``, whether a file stores them as
+  struct columns or, as logs written before typed images did, as JSON
+  text; ``old_data`` / ``new_data`` derived from them on demand.
 * ``pending_changes``  ≅ ``get_pending_changes`` (cdc_system.py:199-231):
-  ``SELECT * FROM {cdc} WHERE synced=0 ORDER BY cdc_id [LIMIT n]`` plus
-  JSON decode of old/new row images.
+  ``SELECT * FROM {cdc} WHERE synced=0 ORDER BY cdc_id [LIMIT n]``; the
+  images come typed from ``log_rows``, so the poll decodes nothing.
 * ``mark_synced``      ≅ ``mark_as_synced`` (cdc_system.py:233-246):
   derives the ``synced``/``sync_timestamp`` columns from the ledger of
   committed sync watermarks instead of updating rows; ``synced_view``
@@ -33,24 +38,70 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cdc_system_spark.model import AUDIT_SCHEMA
+
+
+def stored_schema(row_schema: T.StructType | None) -> T.StructType:
+    """The declared schema the log's files are read with: both layouts
+    of a row image, the JSON text ``old_data`` / ``new_data`` of logs
+    written before images were typed and the typed structs ``old`` /
+    ``new`` in ``row_schema``. A file lacks the columns of the other
+    layout, and of the image its operation does not have (an INSERT has
+    no old image, a DELETE no new one); the parquet reader gives typed
+    nulls for them, and for struct fields an image written before an
+    additive schema evolution lacks."""
+    if row_schema is None:
+        return AUDIT_SCHEMA
+    return T.StructType(
+        AUDIT_SCHEMA.fields
+        + [T.StructField("old", row_schema, True), T.StructField("new", row_schema, True)]
+    )
+
+
+def log_rows(stored: DataFrame, row_schema: T.StructType | None) -> DataFrame:
+    """The change rows of ``stored``, log files read (batch or
+    streaming) with :func:`stored_schema` of ``row_schema``.
+
+    Columns: the audit columns (``model.AUDIT_COLUMNS``), then the typed
+    images ``old`` and ``new`` in ``row_schema``. A typed file's image is
+    read as stored, and a JSON image is decoded with ``from_json``, so
+    logs that mix the layouts read as one; NULL input decodes to NULL, as
+    the reference's conditional decode (cdc_system.py:221-228) does.
+    ``old_data`` / ``new_data`` keep a stored JSON text and are otherwise
+    ``to_json`` of the typed image, which is the text capture wrote when
+    it stored JSON; a reader that does not select them pays nothing for
+    them. Without ``row_schema`` the rows carry no images: the columns
+    are ``cdc_id``, ``operation``, ``record_id``, ``changed_at``,
+    ``synced`` and ``sync_timestamp``."""
+    head, tail = ["cdc_id", "operation", "record_id"], ["changed_at", "synced", "sync_timestamp"]
+    if row_schema is None:
+        return stored.select(*head, *tail)
+    return stored.select(
+        *head,
+        F.coalesce("old_data", F.to_json("old")).alias("old_data"),
+        F.coalesce("new_data", F.to_json("new")).alias("new_data"),
+        *tail,
+        F.coalesce("old", F.from_json("old_data", row_schema)).alias("old"),
+        F.coalesce("new", F.from_json("new_data", row_schema)).alias("new"),
+    )
+
 
 def pending_changes(
     log: DataFrame,
     limit: int | None = None,
     row_schema: T.StructType | None = None,
 ) -> DataFrame:
-    """Oldest-first pending slice of the change log, optionally decoded.
+    """Oldest-first pending slice of the change log.
 
-    With ``row_schema`` the JSON row images are decoded into typed
-    structs (``old`` / ``new`` columns) — the set-oriented version of the
-    per-row ``json.loads`` at cdc_system.py:221-228. ``from_json`` maps
-    NULL input to NULL natively (NULL old_data for INSERT, NULL new_data
-    for DELETE), matching the reference's conditional decode.
+    A log read by :func:`log_rows` already carries the typed images
+    ``old`` / ``new``. ``row_schema`` decodes them from the JSON columns
+    of an audit frame that has none (built outside the log reader, as
+    ``snapshot_diff`` builds its change set).
     """
     df = log.filter(~F.col("synced")).orderBy("cdc_id")
     if limit is not None:
         df = df.limit(limit)
-    if row_schema is not None:
+    if row_schema is not None and "new" not in log.columns:
         df = df.withColumns(
             {
                 "old": F.from_json("old_data", row_schema),

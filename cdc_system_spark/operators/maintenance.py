@@ -21,10 +21,13 @@ sorted by ``cdc_id`` within partitions:
 
 The compacted log is written in the CDC parquet format that capture
 writes (``model.CDC_PARQUET_OPTIONS``, zstd with v2 pages): a change log
-is kept for ever and scanned again and again, so its JSON row images are
+is kept for ever and scanned again and again, so its row images are
 stored in fewer bytes than under Spark's default snappy and v1 pages,
 and its sorted ids delta-encoded. The input may hold files of any
-format; the format is recorded per file.
+format; the format is recorded per file. Its files may also differ in
+columns (a capture's INSERT file stores no old image, a DELETE file no
+new one, and a log of earlier versions stores JSON text), so the input
+is read with the union of its files' schemas.
 
 Compaction writes to a NEW root and swaps atomically-enough for an
 append-only log: writers keep appending to the active root; readers of
@@ -51,7 +54,7 @@ def compact_log(
 
     Returns {"rows", "days", "files_per_day"} for operator visibility.
     """
-    log = spark.read.parquet(log_path)
+    log = spark.read.option("mergeSchema", "true").parquet(log_path)
     rows = log.count()
     dated = log.withColumn("change_date", F.to_date("changed_at"))
     days = dated.select("change_date").distinct().count()

@@ -8,7 +8,7 @@ hand. This module closes it with the same shape the replicator and
 corpus ingestor use: the append-only parquet change log
 (operators/capture.py, the reference's ``{table}_cdc`` contract —
 cdc_system.py:103) consumed through the file source with checkpointed
-offsets, each micro-batch's decoded row images ingested through
+offsets, each micro-batch's typed row images ingested through
 :func:`~cdc_system_spark.operators.ann_index.ann_index_ingest` — which
 auto-encodes EVERY attached tier (PQ codes, residual codes, Matryoshka
 ``pvec``) in its one batch map pass and merges the KMV stats state, so
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from cdc_system_spark.streaming.replicator import decode_with_dead_letter
+from cdc_system_spark.streaming.replicator import quarantine_dead_letters
 from cdc_system_spark.streaming.source import read_change_stream
 
 
@@ -59,7 +59,7 @@ class StreamingAnnIngestor:
         self.index_path = index_path
         self.id_col = id_col
         self.vec_col = vec_col
-        #: decoded row image; float vectors by default — the testdata
+        #: the row image read from the log; float vectors by default — the testdata
         #: embeddings schema and what ann_index_build stores
         self.vec_schema = vec_schema or T.StructType(
             [
@@ -76,11 +76,9 @@ class StreamingAnnIngestor:
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         from cdc_system_spark.operators.ann_index import ann_index_ingest
 
-        decoded = decode_with_dead_letter(
-            batch, self.vec_schema, self.dead_letter_path, key=self.id_col
-        )
+        good = quarantine_dead_letters(batch, self.dead_letter_path, key=self.id_col)
         fresh = (
-            decoded.filter(F.col("operation") != "DELETE")
+            good.filter(F.col("operation") != "DELETE")
             .select(
                 F.col(f"new.{self.id_col}").alias(self.id_col),
                 F.col(f"new.{self.vec_col}").alias(self.vec_col),
@@ -95,7 +93,7 @@ class StreamingAnnIngestor:
 
     def _writer(self):
         stream = read_change_stream(
-            self.spark, self.log_path, self.max_files_per_trigger
+            self.spark, self.log_path, self.max_files_per_trigger, self.vec_schema
         )
         return stream.writeStream.foreachBatch(self._apply_batch).option(
             "checkpointLocation", self.checkpoint_path

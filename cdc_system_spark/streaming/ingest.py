@@ -43,10 +43,11 @@ from cdc_system_spark.streaming.source import read_change_stream
 class StreamingCorpusIngestor:
     """Maintain a curated document corpus from a CDC change stream.
 
-    ``doc_schema`` describes the decoded document row (must contain
-    ``id_col`` and ``text_col``); change rows carry it JSON-encoded in
-    ``new_data``, keyed by ``record_id`` — the audit-table contract the
-    capture side writes.
+    ``doc_schema`` describes the document row (must contain ``id_col``
+    and ``text_col``); change rows carry it as the typed image ``new``,
+    keyed by ``record_id``, as the log reader gives them
+    (``read_change_stream`` with ``doc_schema``, or ``LogCapture.read_log``
+    of a log registered with it).
     """
 
     def __init__(
@@ -502,12 +503,11 @@ class StreamingCorpusIngestor:
                 return
         if batch.isEmpty():
             return
-        decoded = batch.withColumn("new", F.from_json("new_data", self.doc_schema))
         # One net effect per record: an INSERT→DELETE batch nets to
         # DELETE, DELETE→INSERT nets to UPSERT — replaying per-op in
         # order inside foreachBatch would be driver-side sequencing;
         # the reduce is one hash aggregation.
-        net = net_effect_reduce(decoded, key="record_id").localCheckpoint(eager=True)
+        net = net_effect_reduce(batch, key="record_id").localCheckpoint(eager=True)
 
         current = self.corpus.read()
         # disarm the trusted window for the batch's DURATION and
@@ -690,7 +690,7 @@ class StreamingCorpusIngestor:
 
     def _writer(self):
         stream = read_change_stream(
-            self.spark, self.log_path, self.max_files_per_trigger
+            self.spark, self.log_path, self.max_files_per_trigger, self.doc_schema
         )
         return stream.writeStream.foreachBatch(self.apply_batch).option(
             "checkpointLocation", self.checkpoint_path

@@ -14,8 +14,9 @@ as Structured Streaming (SURVEY §2.8 S4-S8):
   ``CDCReplicator`` round does, so ``CDCMonitor`` counts streamed
   changes as synced
 * per-row error-skip (cdc_system.py:308-310) → dead-letter quarantine:
-  rows whose JSON images fail schema decode are appended to a parquet
-  sink instead of silently dropped (S7)
+  rows whose new image is unusable (a JSON image, as earlier versions
+  stored, that fails schema decode) are appended to a parquet sink
+  instead of silently dropped (S7)
 """
 
 from __future__ import annotations
@@ -35,37 +36,34 @@ from cdc_system_spark.operators.capture import LogCapture
 from cdc_system_spark.streaming.source import read_change_stream
 
 
-def decode_with_dead_letter(
+def quarantine_dead_letters(
     batch: DataFrame,
-    row_schema: T.StructType,
     dead_letter_path: str | None = None,
     key: str = "id",
 ) -> DataFrame:
-    """Decode JSON row images; quarantine undecodable non-DELETE rows.
+    """Quarantine the non-DELETE changes of ``batch`` (change rows with
+    the typed images, as ``read_change_stream`` reads them) whose new
+    image has no key; return the others.
 
-    A non-DELETE change whose ``new_data`` fails ``from_json`` is the
+    A typed image always has its key (capture rejects a NULL key). A
+    JSON image of an earlier version that fails ``from_json`` is the
     set-oriented analogue of the reference's per-row apply exception
     (cdc_system.py:308-310). PERMISSIVE-mode ``from_json`` yields an
     all-null struct (not NULL) for malformed input, so the practical
     validity test is a null decoded key — which is also exactly the
-    rows the merge could not apply. Every other row is returned; a row
-    whose test is NULL (a NULL ``operation``) counts as good.
+    rows the merge could not apply. A row whose test is NULL (a NULL
+    ``operation``) counts as good. Quarantined rows are written with
+    the audit columns, their JSON text as stored.
     """
-    decoded = batch.withColumns(
-        {
-            "old": F.from_json("old_data", row_schema),
-            "new": F.from_json("new_data", row_schema),
-        }
-    )
     is_bad = F.coalesce(
         (F.col("operation") != "DELETE")
         & (F.col("new").isNull() | F.col(f"new.{key}").isNull()),
         F.lit(False),
     )
     if dead_letter_path is not None:
-        bad = decoded.filter(is_bad).drop("old", "new")
+        bad = batch.filter(is_bad).drop("old", "new")
         cdc_writer(bad).mode("append").parquet(dead_letter_path)
-    return decoded.filter(~is_bad)
+    return batch.filter(~is_bad)
 
 
 class StreamingReplicator:
@@ -113,11 +111,9 @@ class StreamingReplicator:
         Dead-lettered rows count as consumed."""
 
         def write(polled: DataFrame) -> None:
-            decoded = decode_with_dead_letter(
-                polled, self.row_schema, self.dead_letter_path, key=self.key
-            )
-            if not decoded.isEmpty():
-                self.target.merge_changes(decoded, self.key)
+            good = quarantine_dead_letters(polled, self.dead_letter_path, key=self.key)
+            if not good.isEmpty():
+                self.target.merge_changes(good, self.key)
 
         _replicate_round(self.log, batch, write)
         self.batches_applied += 1
@@ -149,7 +145,7 @@ class StreamingReplicator:
         )
 
     def _writer(self):
-        stream = read_change_stream(self.spark, self.log_path)
+        stream = read_change_stream(self.spark, self.log_path, row_schema=self.row_schema)
         return stream.writeStream.foreachBatch(self._apply_batch).option(
             "checkpointLocation", self.checkpoint_path
         )

@@ -15,16 +15,23 @@ no mark-back write, strictly better at scale.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-from cdc_system_spark.model import AUDIT_SCHEMA
+from cdc_system_spark.operators.changelog import log_rows, stored_schema
 
 
 def read_change_stream(
     spark: SparkSession,
     log_path: str,
     max_files_per_trigger: int | None = None,
+    row_schema: T.StructType | None = None,
 ) -> DataFrame:
-    reader = spark.readStream.schema(AUDIT_SCHEMA)
+    """The change log at ``log_path`` as a stream of change rows, read
+    through the log's one projection (``changelog.log_rows``): with
+    ``row_schema``, the typed images ``old`` / ``new`` beside the audit
+    columns, whichever layout a file stores them in; without it, the
+    change metadata only."""
+    reader = spark.readStream.schema(stored_schema(row_schema))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(log_path)
+    return log_rows(reader.parquet(log_path), row_schema)
